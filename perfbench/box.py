@@ -91,12 +91,16 @@ def jvm_peak_rss_mb(spark) -> float:
 
 def live_heap_mb(spark) -> float:
     """Driver JVM heap still in use after full collections: what the
-    session retains (cached frames, broadcasts, plan and engine caches)."""
+    session retains (cached frames, broadcasts, plan and engine caches).
+    The least of five collect-then-read rounds, so objects that a
+    background thread allocates during one round are not counted."""
     jvm = spark.sparkContext._jvm
-    for _ in range(3):
-        jvm.java.lang.System.gc()
     heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-    return heap.getHeapMemoryUsage().getUsed() / (1024.0 * 1024.0)
+    used = []
+    for _ in range(5):
+        jvm.java.lang.System.gc()
+        used.append(heap.getHeapMemoryUsage().getUsed())
+    return min(used) / (1024.0 * 1024.0)
 
 
 def storage_mb(spark) -> float:

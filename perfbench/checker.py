@@ -6,10 +6,13 @@ documented dense rank over (conv_id, turn_idx) plus the manifest's
 ``doc_id_base``. Appends and deletes are mirrored into the same FTS5 table.
 Operator answers come from ``__spark_entry__.oracle_sql()`` on DuckDB.
 
-The engine's driver-side result processing (R2 field-weight rescoring, R4
-fuzzy penalty, R5 normalisation to 0-100) is replayed over the oracle's
-candidates with the same row-level functions, so what is compared is the
-ranking and the scores the engine produced.
+The engine's driver-side result processing is applied to the oracle's
+candidates before comparing. R5 (score / max x 100, to 1 dp) is
+recomputed here. R2 (field-weight rescoring) and R4 (fuzzy penalty) are
+replayed with the engine's own row-level functions, so a defect in those
+two functions changes the expected page with the engine's and is not
+caught: boosted and fuzzy pages check the candidates, their raw scores and
+the R5 step, not the R2 and R4 adjustments.
 """
 
 import json
@@ -109,11 +112,11 @@ def fuzzy_rewrite(corrector, text: str):
     tokens = corrector.merge_tokens(analyze(text))
     corrected = [p for t in tokens
                  for p in corrector.find_best_correction(t).split(" ")]
-    q = [f'"{t}"' for t in corrected]
-    if len(q) == 1:
-        return q[0], corrected
-    return (f'"{" ".join(corrected)}" OR NEAR({" ".join(q)}, 10) OR '
-            + " OR ".join(q)), corrected
+    match = Fts5Oracle.match_string
+    if len(corrected) == 1:
+        return match("single", corrected), corrected
+    return (f'{match("phrase", corrected)} OR {match("near", corrected)} OR '
+            f'{match("or", corrected)}'), corrected
 
 
 def expected_page(oracle: IndexOracle, q: dict, limit: int, corrector=None):

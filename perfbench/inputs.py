@@ -15,6 +15,8 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
+from yetisearch_spark.oracle import Fts5Oracle
+
 ROLES = ("user", "assistant", "system", "tool")
 BANDS = ("head", "mid", "tail")
 
@@ -119,33 +121,34 @@ def _typo(rng, term: str) -> str:
 def make_query(kind: str, rng, bands, text_tokens) -> dict:
     """One query spec: the engine's query text plus what the oracle needs
     to answer it independently (FTS5 match string, filters, weights)."""
+    match = Fts5Oracle.match_string
     q = {"kind": kind}
     if kind in ("single", "filter"):
         t = _band_term(rng, bands)
-        q.update(text=t, match=f'"{t}"')
+        q.update(text=t, match=match("single", [t]))
         if kind == "filter":
             q["role"] = ROLES[rng.integers(2)]
     elif kind in ("and", "weighted_and"):
         a, b = _doc_pair(rng, text_tokens, 20)
-        q.update(text=f"{a} AND {b}", match=f'"{a}" AND "{b}"')
+        q.update(text=f"{a} AND {b}", match=match("and", [a, b]))
         if kind == "weighted_and":
             q["boost"] = {"title": 2.5}
     elif kind == "or":
         ts = sorted({_band_term(rng, bands) for _ in range(3)})
-        q.update(text=" OR ".join(ts), match=" OR ".join(f'"{t}"' for t in ts))
+        q.update(text=" OR ".join(ts), match=match("or", ts))
     elif kind == "phrase":
         a, b = _doc_pair(rng, text_tokens, 1)
-        q.update(text=f'"{a} {b}"', match=f'"{a} {b}"')
+        q.update(text=f'"{a} {b}"', match=match("phrase", [a, b]))
     elif kind == "near":
         a, b = _doc_pair(rng, text_tokens, 8)
-        q.update(text=f'NEAR("{a}" "{b}", 10)', match=f'NEAR("{a}" "{b}", 10)')
+        q.update(text=f'NEAR("{a}" "{b}", 10)', match=match("near", [a, b]))
     elif kind == "prefix":
         for _ in range(100):
             t = _band_term(rng, bands, min_len=5)
             p = t[:max(3, len(t) - 2)]
             if _fixed(p):
                 break
-        q.update(text=f"{p}*", match=f'"{p}"*')
+        q.update(text=f"{p}*", match=match("prefix", [p]))
     elif kind == "fuzzy":
         t = _band_term(rng, bands, min_len=5, allowed=("head", "mid"))
         q.update(text=_typo(rng, t), fuzzy=True)

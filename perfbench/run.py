@@ -60,6 +60,7 @@ def main(argv=None) -> int:
         workloads.WORKLOADS[args.workload](run)
         run.e2e["live_heap_mb"] = box.live_heap_mb(run.spark)
         run.layer["driver.jvm_peak_rss_mb"] = box.jvm_peak_rss_mb(run.spark)
+        run.layer["driver.python_peak_rss_mb"] = box.vm_hwm_mb(os.getpid())
         prov = box.provenance(ROOT, run.spark, args.seed, args.workload,
                               traced, args.smoke)
     finally:
@@ -74,7 +75,7 @@ def main(argv=None) -> int:
         metrics = {n: {"value": float(run.e2e[n]), "unit": u}
                    for n, u in metric_specs()["end_to_end"]}
     failed = len(run.failures)
-    result = {"correct": failed == 0, "attempted": max(1, run.attempted),
+    result = {"correct": failed == 0, "attempted": run.attempted,
               "failed": failed, "metrics": metrics}
 
     os.makedirs(os.path.join(base, "results"), exist_ok=True)
