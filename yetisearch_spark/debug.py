@@ -84,20 +84,30 @@ def debug_query(spark: SparkSession, index_dir: str, query: str,
                 k: int = 10, pruned: bool = False) -> dict:
     """Compiled AST + executed-plan dump for a query (the Spark analog of
     the reference's SQL + params + EXPLAIN QUERY PLAN). Returns
-    {query, ast, plan, pruning} — ``plan`` is the formatted physical
-    plan string Catalyst would execute."""
-    from .query import SearchIndex, parse_query
+    {query, ast, decode, plan, pruning} — ``plan`` is the formatted
+    physical plan string Catalyst would execute; ``decode`` lists each
+    per-term decode the plan made, in order: {term, positions, route
+    ("driver" or "executor"), est_bytes, threshold}, the estimate and
+    the limit it was compared against (the session's
+    spark.sql.autoBroadcastJoinThreshold, capped at
+    SearchIndex.DRIVER_DECODE_MAX_BYTES); both are None for a vocabulary
+    too big to load, which always decodes on the executor. Terms never
+    decoded one by one (prefix expansions, out-of-vocabulary terms, the
+    pruned tier's block scans) have no entry."""
+    from .query import SearchIndex, decode_scope, parse_query
 
     idx = SearchIndex(spark, index_dir, cache_postings=False,
                       cache_docs=False)
     node = parse_query(query)
     out: dict = {"query": query, "ast": repr(node)}
-    if pruned:
-        from .wand import pruned_topk
-        df = pruned_topk(idx, node, k=k)
-        out["pruning"] = getattr(df, "_pruning_stats", None)
-    else:
-        df = idx.search(node, k=k)
+    with decode_scope() as scope:
+        if pruned:
+            from .wand import pruned_topk
+            df = pruned_topk(idx, node, k=k)
+            out["pruning"] = getattr(df, "_pruning_stats", None)
+        else:
+            df = idx.search(node, k=k)
+    out["decode"] = list(scope.routes.values())
     import io
     from contextlib import redirect_stdout
     buf = io.StringIO()

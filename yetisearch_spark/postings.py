@@ -251,11 +251,14 @@ def _segmented_cumsum(vals: np.ndarray, seg_starts: np.ndarray,
                       counts: np.ndarray) -> np.ndarray:
     """Per-segment cumulative sum of ``vals`` (segments given by start
     index + length over a flat array), vectorized: one global cumsum,
-    then subtract each segment's incoming prefix."""
+    then subtract each segment's incoming prefix (empty segments, even
+    trailing ones, are fine)."""
     if vals.size == 0:
         return vals
     cs = np.cumsum(vals)
-    base = cs[seg_starts] - vals[seg_starts]
+    base = np.zeros(seg_starts.size, dtype=cs.dtype)
+    later = seg_starts > 0
+    base[later] = cs[seg_starts[later] - 1]
     return cs - np.repeat(base, counts)
 
 
@@ -279,27 +282,42 @@ def decode_posting_batch(boundaries: np.ndarray, buf: np.ndarray,
     writes len(positions) as the tf — see encode_posting_group*/the runs
     kernel), which lets the per-doc [n_pos, deltas…] records be located
     by a cumsum over the already-decoded tfs instead of a sequential
-    walk. The invariant is asserted per batch; a violating buffer falls
-    back to the per-block reference decoder (decode_posting_block).
+    walk. Every gathered slot is bounds-checked against its own block
+    first: a batch with a block whose records would run past its bytes
+    (truncated or bit-flipped data), or whose n_pos != tf, goes to the
+    per-block fallback, which decodes a well-formed foreign block exactly
+    and raises ValueError naming a malformed one.
     """
     nblk = boundaries.size - 1
-    if nblk <= 0 or buf.size == 0:
+    if nblk <= 0:
         e = np.empty(0, dtype=np.int64)
         if with_positions:
             return (np.zeros(0, np.int64), e, e, e,
                     np.zeros(1, np.int64), np.empty(0, np.int32))
         return np.zeros(0, np.int64), e, e, e
 
-    starts = boundaries[:-1]
+    starts, stops = boundaries[:-1], boundaries[1:]
     # varint ends are a PER-BYTE property (bit 7 clear), so block varint
     # boundaries can be located without any sequential walk
     is_last = (buf & 0x80) == 0
+    if (boundaries[0] < 0 or boundaries[-1] > buf.size
+            or (stops <= starts).any() or not is_last[stops - 1].all()):
+        # an empty block, or one ending inside a varint: its varints
+        # would run into the next block's bytes
+        return _decode_batch_fallback(boundaries, buf, with_positions)
     ends = np.flatnonzero(is_last)
+    # varint index of each block's first varint, and the varint count of
+    # each block (blocks start and stop on varint boundaries, checked above)
+    blk_v0 = np.searchsorted(ends, starts)
+    nv = np.searchsorted(ends, stops) - blk_v0
     if not with_positions:
         # decode ONLY the header varints (1 + 3n per block): the
         # positions tail is most of the bytes and none of it is needed.
         # First varint (n docs) decoded directly — blocks cap n at
         # BLOCK_SIZE so this converges in 1-2 byte passes.
+        if (ends[blk_v0] - starts >= 9).any():
+            # an n varint over 9 bytes would overflow the int64 decode
+            return _decode_batch_fallback(boundaries, buf, with_positions)
         first = buf[starts].astype(np.int64)
         n_arr = first & 0x7F
         cont = first >= 128
@@ -313,58 +331,105 @@ def decode_posting_batch(boundaries: np.ndarray, buf: np.ndarray,
             nxt_cont[cont] = nxt >= 128
             cont = nxt_cont
             shift += 7
-        blk_first = np.searchsorted(ends, starts)
-        head_end = ends[blk_first + 3 * n_arr]     # last header varint byte
+        if (n_arr > (nv - 1) // 3).any():
+            return _decode_batch_fallback(boundaries, buf, with_positions)
+        head_end = ends[blk_v0 + 3 * n_arr]     # last header varint byte
         head_len = head_end - starts + 1
         vals = decode_varints(buf[_ragged_gather_idx(starts, head_len)])
         blk_v0 = np.concatenate(([0],
                                  np.cumsum(1 + 3 * n_arr)))[:-1]
     else:
         vals = decode_varints(buf)
-        # varint index of each block's first varint: count of varint ends
-        # strictly before the block's first byte
-        blk_v0 = np.searchsorted(ends, starts)
-        n_arr = vals[blk_v0].astype(np.int64)      # docs per block
+        n_u = vals[blk_v0]
+        if (n_u > ((nv - 1) // 4).astype(np.uint64)).any():
+            return _decode_batch_fallback(boundaries, buf, with_positions)
+        n_arr = n_u.astype(np.int64)             # docs per block
     total_docs = int(n_arr.sum())
     doc_idx = _ragged_gather_idx(blk_v0 + 1, n_arr)
     deltas = vals[doc_idx].astype(np.int64)
     blk_doc_starts = np.concatenate(([0], np.cumsum(n_arr)))[:-1]
     doc_ids = _segmented_cumsum(deltas, blk_doc_starts, n_arr)
-    tfs = vals[_ragged_gather_idx(blk_v0 + 1 + n_arr, n_arr)].astype(np.int64)
+    tfs_u = vals[_ragged_gather_idx(blk_v0 + 1 + n_arr, n_arr)]
     doc_lens = vals[_ragged_gather_idx(blk_v0 + 1 + 2 * n_arr,
                                        n_arr)].astype(np.int64)
     if not with_positions:
-        return n_arr, doc_ids, tfs, doc_lens
+        return n_arr, doc_ids, tfs_u.astype(np.int64), doc_lens
 
     # positions region of block b starts at varint blk_v0[b] + 1 + 3n_b;
     # doc j's count slot sits j + (Σ tf of earlier docs in the block)
     # varints further in — locatable because n_pos == tf (verified below)
+    # once every block's n + Σ tf position varints fit in its own bytes
+    if (tfs_u > np.repeat(nv, n_arr).astype(np.uint64)).any():
+        return _decode_batch_fallback(boundaries, buf, with_positions)
+    tfs = tfs_u.astype(np.int64)
+    tf_cs = np.concatenate(([0], np.cumsum(tfs)))
+    tf_blk = tf_cs[blk_doc_starts + n_arr] - tf_cs[blk_doc_starts]
+    if (1 + 4 * n_arr + tf_blk > nv).any():
+        return _decode_batch_fallback(boundaries, buf, with_positions)
     pos_v0 = blk_v0 + 1 + 3 * n_arr
     tf_excl = _segmented_cumsum(tfs, blk_doc_starts, n_arr) - tfs
     in_blk_ord = (np.arange(total_docs, dtype=np.int64)
                   - np.repeat(blk_doc_starts, n_arr))
     count_slots = np.repeat(pos_v0, n_arr) + in_blk_ord + tf_excl
-    if total_docs and not (vals[count_slots] == tfs.astype(np.uint64)).all():
+    if total_docs and not (vals[count_slots] == tfs_u).all():
         # foreign buffer where n_pos != tf — sequential reference decode
         return _decode_batch_fallback(boundaries, buf, True)
     pdelta_idx = _ragged_gather_idx(count_slots + 1, tfs)
     pdeltas = vals[pdelta_idx].astype(np.int64)
-    doc_pos_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+    doc_pos_starts = tf_cs[:-1]
     pos_values = _segmented_cumsum(pdeltas, doc_pos_starts,
                                    tfs).astype(np.int32)
-    pos_offsets = np.concatenate(([0], np.cumsum(tfs)))
-    return n_arr, doc_ids, tfs, doc_lens, pos_offsets, pos_values
+    return n_arr, doc_ids, tfs, doc_lens, tf_cs, pos_values
+
+
+class CorruptBlockError(ValueError):
+    """Posting block ``block`` (its index in the decoded batch) holds
+    records that do not fit in its own bytes."""
+
+    def __init__(self, block: int, why: str):
+        super().__init__(f"corrupt posting block {block}: {why}")
+        self.block = block
+
+
+def _check_block(data: bytes, with_positions: bool, i: int) -> None:
+    """Raise CorruptBlockError unless block ``i``'s header (and, with
+    positions, every per-doc position record) lies inside its bytes."""
+    def bad(why: str):
+        raise CorruptBlockError(i, f"{why} ({len(data)} bytes)")
+
+    if not data:
+        bad("empty")
+    if data[-1] & 0x80:
+        bad("ends inside a varint")
+    vals = decode_varints(data)
+    n = int(vals[0])
+    if 1 + 3 * n > vals.size:
+        bad(f"header of {n} docs needs {1 + 3 * n} varints, "
+            f"block has {vals.size}")
+    if with_positions:
+        j = 1 + 3 * n
+        for d in range(n):
+            if j >= vals.size or j + 1 + int(vals[j]) > vals.size:
+                bad(f"position record of doc {d} runs past the block")
+            j += 1 + int(vals[j])
 
 
 def _decode_batch_fallback(boundaries: np.ndarray, buf: np.ndarray,
                            with_positions: bool):
     """Reference per-block decode, same return shape as
-    decode_posting_batch (only reachable on buffers violating the
-    n_pos == tf block invariant — no production encoder emits those)."""
+    decode_posting_batch, for batches the vectorized pass cannot locate
+    records in: a well-formed block whose n_pos != tf (no production
+    encoder emits those) decodes exactly; a malformed one raises
+    ValueError (see _check_block)."""
     nblk = boundaries.size - 1
     rows, ids_l, tfs_l, dls_l, pos_l = [], [], [], [], []
     for i in range(nblk):
-        data = buf[boundaries[i]:boundaries[i + 1]].tobytes()
+        lo, hi = int(boundaries[i]), int(boundaries[i + 1])
+        if not 0 <= lo <= hi <= buf.size:
+            raise CorruptBlockError(i, f"bytes [{lo}, {hi}) outside a "
+                                       f"{buf.size}-byte buffer")
+        data = buf[lo:hi].tobytes()
+        _check_block(data, with_positions, i)
         if with_positions:
             ids, tf, dl, pos = decode_posting_block(data, with_positions=True)
             pos_l.extend(pos)

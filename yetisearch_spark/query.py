@@ -42,6 +42,8 @@ Serving-path shape (round 2 — one shuffle, one planning job, hot cache):
 
 from __future__ import annotations
 
+import contextvars
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
@@ -52,9 +54,10 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .analyzer import analyze
-from .postings import BM25_B, BM25_K1, decode_posting_block
+from .postings import BM25_B, BM25_K1
 from .build import load_docs, load_manifest
 
+import functools
 import math
 import os
 import re
@@ -330,50 +333,55 @@ _MATCH_SCHEMA = StructType([
 ])
 
 
-def _decode_factory(with_positions: bool):
-    """Legacy pandas decode kernel (kept as the reference twin for the
-    Arrow kernel below; no production call sites)."""
-    def decode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            terms, dids, tfs, dls, poss = [], [], [], [], []
-            for term, data in zip(pdf["term"], pdf["data"]):
-                if with_positions:
-                    ids, tf, dl, pos = decode_posting_block(data, with_positions=True)
-                    poss.extend([p.astype(np.int32) for p in pos])
-                else:
-                    ids, tf, dl = decode_posting_block(data)
-                n = ids.size
-                terms.append(np.repeat(term, n))
-                dids.append(ids)
-                tfs.append(tf)
-                dls.append(dl)
-            out = pd.DataFrame({
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(dids),
-                "tf": np.concatenate(tfs).astype(np.int32),
-                "doc_len": np.concatenate(dls).astype(np.int32),
-            })
-            out["positions"] = poss if with_positions else None
-            yield out
-    return decode
+def _decode_blocks(datas, with_positions: bool, terms):
+    """Posting blocks in a (large_)binary Arrow array → the output of
+    decode_posting_batch. The array's (offsets, values) buffers ARE the
+    block-boundary layout the kernel wants, so nothing is copied.
+    ``terms`` (one term, or an Arrow array of each block's term) names
+    the term of a corrupt block in the raised ValueError."""
+    import pyarrow as pa
+
+    from .postings import CorruptBlockError, decode_posting_batch
+
+    if len(datas) == 0:
+        return decode_posting_batch(np.zeros(1, np.int64),
+                                    np.empty(0, np.uint8), with_positions)
+    off_dt = np.int64 if pa.types.is_large_binary(datas.type) else np.int32
+    bufs = datas.buffers()
+    offs = np.frombuffer(bufs[1], off_dt)[
+        datas.offset:datas.offset + len(datas) + 1].astype(np.int64)
+    vals = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
+            else np.empty(0, np.uint8))
+    lo = int(offs[0])
+    try:
+        return decode_posting_batch(offs - lo, vals[lo:int(offs[-1])],
+                                    with_positions=with_positions)
+    except CorruptBlockError as e:
+        term = terms if isinstance(terms, str) else terms[e.block].as_py()
+        raise ValueError(f"term {term!r}: {e}") from e
+
+
+def _posting_columns(out, with_positions: bool) -> list:
+    """decode_posting_batch output → Arrow arrays doc_id, tf, doc_len
+    (+ positions when decoded), assembled zero-copy from the flat numpy
+    results (pa.ListArray.from_arrays, no per-doc Python objects)."""
+    import pyarrow as pa
+
+    cols = [pa.array(out[1]), pa.array(out[2].astype(np.int32)),
+            pa.array(out[3].astype(np.int32))]
+    if with_positions:
+        cols.append(pa.ListArray.from_arrays(
+            pa.array(out[4].astype(np.int32)), pa.array(out[5])))
+    return cols
 
 
 def _decode_arrow_factory(with_positions: bool):
-    """mapInArrow posting-block decode kernel (round 7).
-
-    The Arrow binary column's (offsets, values) buffers ARE the
-    block-boundary layout decode_posting_batch wants, so the whole batch
-    decodes in one vectorized pass — no per-block Python, no per-doc
-    position loop — and the output batch is assembled zero-copy from the
-    flat numpy results (pa.ListArray.from_arrays for positions instead
-    of a pandas object column of 10⁶ small arrays). Measured 3.5×
-    (light) / 16× (positional) over the pandas kernel on a 1M-posting
-    head term."""
+    """mapInArrow posting-block decode kernel (round 7): each Arrow batch
+    of (term, data) block rows decodes in one vectorized pass — no
+    per-block Python, no per-doc position loop. Measured 3.5× (light) /
+    16× (positional) over a per-block pandas kernel on a 1M-posting head
+    term."""
     import pyarrow as pa
-
-    from .postings import decode_posting_batch
 
     out_schema = pa.schema([
         pa.field("term", pa.string(), False),
@@ -388,38 +396,34 @@ def _decode_arrow_factory(with_positions: bool):
             if batch.num_rows == 0:
                 continue
             terms = batch.column(batch.schema.get_field_index("term"))
-            datas = batch.column(batch.schema.get_field_index("data"))
-            off_dt = np.int64 if pa.types.is_large_binary(datas.type) \
-                else np.int32
-            bufs = datas.buffers()
-            offs = np.frombuffer(bufs[1], off_dt)[
-                datas.offset:datas.offset + len(datas) + 1].astype(np.int64)
-            vals = np.frombuffer(bufs[2], np.uint8)
-            lo = int(offs[0])
-            out = decode_posting_batch(offs - lo, vals[lo:int(offs[-1])],
-                                       with_positions=with_positions)
-            rows, ids, tfs, dls = out[:4]
-            n = ids.size
+            out = _decode_blocks(
+                batch.column(batch.schema.get_field_index("data")),
+                with_positions, terms)
+            rows, n = out[0], out[1].size
             if n == 0:
                 continue
+            cols = _posting_columns(out, with_positions)
+            if not with_positions:
+                cols.append(pa.nulls(n, pa.list_(pa.int32())))
             idx = np.repeat(np.arange(len(rows), dtype=np.int64), rows)
-            if with_positions:
-                po, pv = out[4], out[5]
-                plist = pa.ListArray.from_arrays(
-                    pa.array(po.astype(np.int32)), pa.array(pv))
-            else:
-                plist = pa.nulls(n, pa.list_(pa.int32()))
-            yield pa.record_batch(
-                [terms.take(pa.array(idx)), pa.array(ids),
-                 pa.array(tfs.astype(np.int32)),
-                 pa.array(dls.astype(np.int32)), plist],
-                schema=out_schema)
+            yield pa.record_batch([terms.take(pa.array(idx))] + cols,
+                                  schema=out_schema)
     return decode
 
 
 def decode_plan(scan: DataFrame, with_positions: bool) -> DataFrame:
     """(term, data) block rows → decoded posting rows via the vectorized
-    Arrow kernel — the one decode path every query route shares."""
+    Arrow kernel, run in Spark's Python tasks (the executor route).
+
+    The one kernel (``decode_posting_batch`` over the blocks' Arrow
+    buffers) runs in two places. Here, inside ``mapInArrow``; and on the
+    driver, where SearchIndex._term_decode_plan decodes a term whose
+    estimated decoded size (16·df, plus 4·cf with positions) is within
+    the session's ``spark.sql.autoBroadcastJoinThreshold`` and
+    SearchIndex.DRIVER_DECODE_MAX_BYTES, and hands the rows to Spark as
+    a local relation (see SearchIndex._decode_route).
+    Prefix scans, warm()'s combined fills and the pruned tier's block
+    scans always come here."""
     return (scan.select("term", "data")
             .mapInArrow(_decode_arrow_factory(with_positions),
                         schema=_DECODED_SCHEMA))
@@ -480,6 +484,38 @@ def _near_trim(instances: list[np.ndarray], plens: list[int], distance: int,
         hi = np.searchsorted(valid_ms, xs + (plens[i] - 1), side="right")
         counts.append(tally(xs[hi > lo]))
     return True, counts
+
+
+@dataclass
+class DecodeScope:
+    """Decode state of ONE search()/count()/match_scores() call.
+
+    ``frames``: driver-decoded term frames by (index, term, positions),
+    so each variant is built at most once per call. ``routes``: every
+    decode route taken, by (term, positions) — debug_query reports them."""
+    frames: dict = field(default_factory=dict)
+    routes: dict = field(default_factory=dict)
+
+
+_SCOPE: contextvars.ContextVar = contextvars.ContextVar(
+    "yetisearch_decode_scope", default=None)
+
+
+@contextmanager
+def decode_scope():
+    """Open a per-call DecodeScope, or join the enclosing one. The state
+    lives in a ContextVar and every thread starts with an empty context,
+    so concurrent callers never share it."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        yield scope
+        return
+    scope = DecodeScope()
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
 
 
 # ---------------------------------------------------------------------------
@@ -799,7 +835,7 @@ class SearchIndex:
         never pay for positions; phrase/NEAR/weighted paths request the
         positional variant (cached separately)."""
         def factory():
-            return self._term_decode_plan(term, with_positions)
+            return self._term_decode_plan(term, with_positions)[0]
         key = ("t", term, with_positions)
         if not self._cache_postings or key in self._decoded_cache:
             # the hint only sizes a NEW cache fill — don't pay a term-stats
@@ -809,21 +845,131 @@ class SearchIndex:
         df_hint = self.term_stats_for([term]).get(term, (None,))[0]
         return self._cached_decoded(key, factory, n_docs_hint=df_hint)
 
-    def _term_decode_plan(self, term: str, with_positions: bool) -> DataFrame:
-        """Uncached decode plan for one term: bucket pruning + term
-        predicate pushdown into the parquet scan, vectorized Arrow
-        decode, delete-exact (hidden docs never reach any caller —
-        phrase dfs / NEAR trims / counts need no per-query anti-join;
-        the deltas keep term stats exact to match)."""
-        from .xxhash64 import bucket_of
-        b = bucket_of(term, self.num_buckets)
-        out = decode_plan(self._postings
-                          .where(F.col("bucket") == b)
-                          .where(F.col("term") == term),
-                          with_positions)
+    def _term_decode_plan(self, term: str,
+                          with_positions: bool) -> tuple[DataFrame, str]:
+        """Uncached decode plan for one term, delete-exact (hidden docs
+        never reach any caller — phrase dfs / NEAR trims / counts need no
+        per-query anti-join; the deltas keep term stats exact to match)
+        → (frame, route), route "driver" or "executor".
+
+        Executor route: bucket pruning + term predicate pushdown into the
+        parquet scan, vectorized Arrow decode in a Python task. Driver
+        route (small terms, see _decode_route): the same kernel on the
+        driver, no Python task. Within one call's DecodeScope a driver
+        frame is built once per (term, positions) and a light request
+        reuses an already-built positional frame."""
+        route = self._decode_route(term, with_positions)
+        scope = _SCOPE.get()
+        if scope is not None:
+            scope.routes[(term, with_positions)] = route
+        if route["route"] == "executor":
+            from .xxhash64 import bucket_of
+            b = bucket_of(term, self.num_buckets)
+            out = decode_plan(self._postings
+                              .where(F.col("bucket") == b)
+                              .where(F.col("term") == term),
+                              with_positions)
+        else:
+            frames = scope.frames if scope is not None else {}
+            for wp in (with_positions, True):
+                hit = frames.get((self, term, wp))
+                if hit is not None:
+                    return hit, "driver"
+            out = self._driver_decode(term, with_positions)
         if self._tomb is not None:
             out = out.join(self._tomb.select("doc_id"), "doc_id", "left_anti")
+        if route["route"] == "driver":
+            frames[(self, term, with_positions)] = out
+        return out, route["route"]
+
+    #: upper bound on a driver decode's estimated bytes, whatever the
+    #: session's broadcast threshold. Measured on 4 cores (README): the
+    #: driver route wins up to about 35k postings (560 KB light, 700 KB
+    #: positional) and loses beyond, 4.5 s against 0.66 s at 600k, since
+    #: a local relation's rows travel inside every task's plan.
+    DRIVER_DECODE_MAX_BYTES = 512 * 1024
+
+    def _decode_route(self, term: str, with_positions: bool) -> dict:
+        """Where one term's uncached decode runs, decided with zero jobs
+        from its term stats. The estimated decoded size is 16 bytes a
+        posting (doc_id, tf, doc_len), plus 4 a position when positions
+        are decoded. Within the session's
+        spark.sql.autoBroadcastJoinThreshold (a local relation reaches
+        tasks the way a broadcast does; -1 turns the route off) and
+        DRIVER_DECODE_MAX_BYTES, the term is decoded on the driver; above
+        them, in a Python task. Decodes that fill the postings cache
+        always take the executor route (a cached frame's plan would pin
+        its local rows in the JVM heap for as long as it stays cached),
+        and so do terms of a vocabulary too big to load, whose stats
+        would cost a job to look up; neither has an estimate."""
+        out = {"term": term, "positions": with_positions,
+               "est_bytes": None, "threshold": None, "route": "executor"}
+        vocab = None if self._cache_postings else self._vocab()
+        if not vocab:
+            return out
+        df, cf = vocab.get(term, (0, 0))
+        est = 16 * df + (4 * cf if with_positions else 0)
+        threshold = int(self.spark._jsparkSession.sessionState().conf()
+                        .autoBroadcastJoinThreshold())
+        limit = min(threshold, self.DRIVER_DECODE_MAX_BYTES)
+        out.update(est_bytes=est, threshold=limit)
+        if est <= limit:
+            out["route"] = "driver"
         return out
+
+    @functools.cached_property
+    def _postings_files(self) -> dict[int, list[str]]:
+        """Local paths of the postings files, by bucket: the listing the
+        _postings relation captured when the view was built (inputFiles
+        runs no job), so the driver route reads exactly the files the
+        executor route scans."""
+        from urllib.parse import urlparse
+        from urllib.request import url2pathname
+
+        files: dict[int, list[str]] = {}
+        for uri in sorted(self._postings.inputFiles()):
+            m = re.search(r"/bucket=(\d+)/", uri)
+            if m:
+                files.setdefault(int(m.group(1)), []).append(
+                    url2pathname(urlparse(uri).path))
+        return files
+
+    def _driver_decode(self, term: str, with_positions: bool) -> DataFrame:
+        """One term decoded on the driver: its blocks are read with
+        pyarrow from the files of its bucket in the _postings relation's
+        listing (term predicate pushed to the row groups), decoded by
+        decode_plan's kernel, and handed to Spark as a local relation of
+        (doc_id, tf, doc_len[, positions]) with the term added as a
+        literal column. A listed file that is gone (a merge or compaction
+        removed it under this view) raises FileNotFoundError, as the
+        executor route's scan fails."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        from .xxhash64 import bucket_of
+
+        files = self._postings_files.get(
+            bucket_of(term, self.num_buckets), [])
+        gone = [f for f in files if not os.path.exists(f)]
+        if gone:
+            raise FileNotFoundError(
+                f"postings file {gone[0]} of term {term!r} no longer "
+                "exists; the index changed under this view, so reopen it")
+        data = (ds.dataset(files, format="parquet")
+                .to_table(columns=["data"], filter=pc.field("term") == term)
+                .column("data").combine_chunks()
+                if files else pa.array([], pa.binary()))
+        out = _decode_blocks(data, with_positions, term)
+        schema = _MATCH_SCHEMA if with_positions \
+            else StructType(_MATCH_SCHEMA.fields[:3])
+        local = self.spark.createDataFrame(
+            pa.table(_posting_columns(out, with_positions),
+                     names=schema.fieldNames()), schema=schema)
+        positions = (F.col("positions") if with_positions
+                     else F.lit(None).cast("array<int>").alias("positions"))
+        return local.select(F.lit(term).alias("term"), "doc_id", "tf",
+                            "doc_len", positions)
 
     def _decoded_for_prefix(self, prefix: str) -> DataFrame:
         def factory():
@@ -891,9 +1037,9 @@ class SearchIndex:
 
     _VOCAB_CACHE_MAX = 2_000_000
 
-    def term_stats_for(self, terms: Sequence[str]) -> dict[str, tuple[int, int]]:
-        if not terms:
-            return {}
+    def _vocab(self) -> dict | bool:
+        """The whole term dictionary {term: (df, cf)}, loaded once, or
+        False when the vocabulary is too big to load (per-query lookups)."""
         if self._vocab_cache is None:
             vocab_n = (self.manifest.get("stages", {})
                        .get("term_stats", {}).get("counters", {})
@@ -905,9 +1051,14 @@ class SearchIndex:
                                      for r in rows}
             else:
                 self._vocab_cache = False  # too big — per-query lookups
-        if self._vocab_cache:
-            return {t: self._vocab_cache[t] for t in set(terms)
-                    if t in self._vocab_cache}
+        return self._vocab_cache
+
+    def term_stats_for(self, terms: Sequence[str]) -> dict[str, tuple[int, int]]:
+        if not terms:
+            return {}
+        vocab = self._vocab()
+        if vocab:
+            return {t: vocab[t] for t in set(terms) if t in vocab}
         rows = (self._term_stats
                 .where(F.col("term").isin(list(set(terms))))
                 .select("term", "df", "cf").collect())
@@ -1278,10 +1429,13 @@ class SearchIndex:
             if shared:
                 shared_frames = {}
                 for t in shared:
-                    f = (self._term_decode_plan(t, pos_need[t])
-                         .persist())
-                    handles.append(f)
-                    shared_frames[t] = f
+                    f, route = self._term_decode_plan(t, pos_need[t])
+                    if route == "executor":
+                        f = f.persist()
+                        handles.append(f)
+                        shared_frames[t] = f
+                    # a driver frame stays in the call's DecodeScope,
+                    # where every consumer's _term_match finds it
         for p in phraselikes:
             if isinstance(p, PrefixNode):
                 key = ("pref", p.prefix)
@@ -1372,11 +1526,13 @@ class SearchIndex:
         from .build import FIELD_SHIFT
 
         def step(acc, x):
+            # field clamped to [0, len(wvec)-1], as the numpy tallies clip
+            # it: a last field past 2^FIELD_SHIFT tokens keeps its weight
             fld = F.shiftright(x, FIELD_SHIFT)
-            expr = F.when(fld == 0, F.lit(float(wvec[0])))
-            for i, wi in enumerate(wvec[1:], start=1):
+            expr = F.when(fld <= 0, F.lit(float(wvec[0])))
+            for i, wi in enumerate(wvec[1:-1], start=1):
                 expr = expr.when(fld == i, F.lit(float(wi)))
-            return acc + expr.otherwise(F.lit(1.0))
+            return acc + expr.otherwise(F.lit(float(wvec[-1])))
 
         return F.aggregate(arr, F.lit(0.0), step)
 
@@ -1453,9 +1609,10 @@ class SearchIndex:
             old.unpersist()
         self._retired.clear()
         wvec = self._normalize_weights(weights)
-        return self._cached_plan(
-            ("ms", node, wvec),
-            lambda: self._match_scores_build(node, wvec))
+        with decode_scope():
+            return self._cached_plan(
+                ("ms", node, wvec),
+                lambda: self._match_scores_build(node, wvec))
 
     def _match_scores_build(self, node, wvec) -> DataFrame:
         empty = self.spark.createDataFrame([], "doc_id long, score double")
@@ -1781,9 +1938,10 @@ class SearchIndex:
                repr(sorted(filters.items())) if filters else None, with_docs,
                self.pruned_gate_blocks,
                (float(after[0]), int(after[1])) if after else None)
-        return self._cached_plan(
-            key, lambda: self._search_build(node, k, filters, with_docs,
-                                            weights, after=after))
+        with decode_scope():
+            return self._cached_plan(
+                key, lambda: self._search_build(node, k, filters, with_docs,
+                                                weights, after=after))
 
     def _search_build(self, node, k, filters, with_docs, weights,
                       after: tuple | None = None) -> DataFrame:
@@ -1974,7 +2132,8 @@ class SearchIndex:
         node = parse_query(query) if isinstance(query, str) else query
         if node is None:
             return 0
-        slots, phrase_tables, _, near_tables, handles = self._plan(node)
+        with decode_scope():
+            slots, phrase_tables, _, near_tables, handles = self._plan(node)
         if not slots:
             return 0
         try:
