@@ -683,7 +683,7 @@ def q_weighted_phrase_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-isolated), the weighted tf (instance-start field weight),
     the phrase df, and BM25 from the materialized per-field token table
     (reference bm25(fts, w…): src/Storage/SqliteStorage.php:993-1021)."""
-    from yetisearch_spark.query import SearchIndex
+    from yetisearch_spark.query import SearchIndex, parse_query
     idx = _engine_index_mf(spark, sf_dir)
     fl0 = F.element_at("field_lens", 1)
     in_f0 = F.col("pos") < fl0
@@ -705,7 +705,8 @@ def q_weighted_phrase_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = SearchIndex(spark, idx.index_dir)
     routed.pruned_gate_blocks = 0
     df = routed.search('"data queri"', k=10, weights=(2.0, 1.0))
-    assert getattr(df, "_pruning_stats", None) is not None, \
+    assert routed.route(parse_query('"data queri"'), 10,
+                        wvec=(2.0, 1.0)).kind == "pruned", \
         "weighted phrase did not route through the pruned tier"
     return (df.select("doc_id", F.round("score", 4).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")))

@@ -235,8 +235,8 @@ def main() -> None:
             out = fn(skew_idx)
             out.collect()
             runs.append(time.time() - t0)
+            # every Route's handles are in its index's handle registry
             for ix in (skew_idx, facade_idx):
-                ix.release(getattr(out, "_ys_handles", []))
                 for g in list(ix._handle_groups):
                     ix.release(g)
         return sorted(runs)[n // 2]

@@ -4,7 +4,11 @@
 
     spark-submit --py-files yetisearch_spark.zip scripts/search_cli.py \
         --index /path/index --query '"data process" OR comp*' [-k 10] \
-        [--mode search|count|suggest|dsl|explain|verify] [--pruned]
+        [--mode search|count|suggest|dsl|explain|verify]
+
+Search mode serves through SearchIndex.search, whose route planner
+picks the block-max pruned tier where the cost gate allows it; explain
+mode reports that route.
 """
 
 import argparse
@@ -23,8 +27,6 @@ def main() -> None:
     ap.add_argument("--mode", default="search",
                     choices=["search", "count", "suggest", "dsl",
                              "explain", "verify"])
-    ap.add_argument("--pruned", action="store_true",
-                    help="use the block-max pruned top-k path")
     args = ap.parse_args()
     if args.mode != "verify" and not args.query:
         ap.error("--query is required for this mode")
@@ -48,7 +50,7 @@ def main() -> None:
         # reference debug:query analog (bin/yetisearch:130-156)
         from yetisearch_spark.debug import debug_query
         print(json.dumps(debug_query(spark, args.index, args.query,
-                                     k=args.k, pruned=args.pruned),
+                                     k=args.k),
                          indent=2))
         spark.stop()
         return
@@ -75,11 +77,7 @@ def main() -> None:
         res["results"] = res["results"][: args.k]
         print(json.dumps(res, default=str))
     else:
-        if args.pruned:
-            from yetisearch_spark.wand import pruned_topk
-            rows = pruned_topk(idx, args.query, k=args.k).collect()
-        else:
-            rows = idx.search(args.query, k=args.k, with_docs=True).collect()
+        rows = idx.search(args.query, k=args.k, with_docs=True).collect()
         print(json.dumps([{k: v for k, v in r.asDict().items()
                            if k not in ("tokens",)}
                           for r in rows], default=str))

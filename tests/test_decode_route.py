@@ -269,6 +269,136 @@ def test_debug_query_reports_decode_routes(spark, skew_dirs):
     assert "LocalTableScan" in out["plan"]
 
 
+#: the planner's route for each serving shape with the pruned gate
+#: forced (pruned_gate_blocks=0), on cached handles: every shape prunes,
+#: the filter through the filtered tier
+FORCED_KINDS = {"single": "pruned", "and": "pruned", "and_mid": "pruned",
+                "phrase": "pruned", "near": "pruned", "weighted": "pruned",
+                "filter": "filtered", "wor": "pruned"}
+
+
+def _spy_routes(monkeypatch) -> list:
+    """Record every Route the planner returns, whichever facade asked."""
+    seen = []
+    route = SearchIndex.route
+
+    def spy(self, *a, **kw):
+        seen.append(route(self, *a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(SearchIndex, "route", spy)
+    return seen
+
+
+def _page(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _served(res):
+    return ([(r["id"], r["score"]) for r in res["results"]], res["total"],
+            res.get("facets"))
+
+
+def test_planner_routes_per_facade(spark, skew_dirs, monkeypatch):
+    """SearchIndex.search and Engine.search take the same route kind for
+    the same need, and serve the pages and totals of their
+    gate-disabled twins. Engine cursor pages stay exact (reason
+    "cursor"); a facet query prunes only an AND-rule shape."""
+    from yetisearch_spark.engine import Engine, SearchQuery
+
+    seen = _spy_routes(monkeypatch)
+    plain = skew_dirs["plain"]
+    si, si_twin = SearchIndex(spark, plain), SearchIndex(spark, plain)
+    si.pruned_gate_blocks, si_twin.pruned_gate_blocks = 0, -1
+    cfg = {"enable_fuzzy": False}
+    eng = Engine(spark, {"main": plain}, {**cfg, "pruned_gate_blocks": 0})
+    twin = Engine(spark, {"main": plain}, {**cfg, "pruned_gate_blocks": -1})
+
+    def both(sq):
+        got = _served(eng.search("main", sq))
+        r = seen[-1]
+        assert _served(twin.search("main", sq)) == got, sq
+        assert (seen[-1].kind, seen[-1].reason) == ("exact", "disabled")
+        return r
+
+    try:
+        for kind, q, weights, filters in SHAPES:
+            page = _page(si.search(q, k=10, weights=weights,
+                                   filters=filters))
+            r = seen[-1]
+            assert (r.kind, r.reason) == (FORCED_KINDS[kind], None), kind
+            assert page == _page(si_twin.search(q, k=10, weights=weights,
+                                                filters=filters)), kind
+            er = both(SearchQuery(
+                query=q, limit=10, bypass_cache=True,
+                boost_fields=weights or {},
+                filters=[{"field": c, "operator": "=", "value": v}
+                         for c, v in (filters or {}).items()]))
+            assert er.kind == r.kind, kind
+
+        p1 = si_twin.search("zzhead", k=10).collect()
+        after = (p1[-1]["score"], p1[-1]["doc_id"])
+        page = _page(si.search("zzhead", k=10, after=after))
+        # zzhead's 38 blocks are too few for θ to bite at k' = 64, so
+        # the cursor tier hands the page to the exact path
+        assert (seen[-1].kind, seen[-1].reason) == ("exact", "deepening")
+        assert page == _page(si_twin.search("zzhead", k=10, after=after))
+        first = eng.search("main", SearchQuery(query="zzhead", limit=10,
+                                               bypass_cache=True))
+        r = both(SearchQuery(query="zzhead", limit=10, bypass_cache=True,
+                             search_after=first["next_cursor"]))
+        assert (r.kind, r.reason) == ("exact", "cursor")
+
+        facets = {"role": {}}
+        r = both(SearchQuery(query="zzhead AND zzrare", limit=10,
+                             bypass_cache=True, facets=facets))
+        assert (r.kind, r.reason) == ("pruned", None)
+        r = both(SearchQuery(query="zzhead", limit=10, bypass_cache=True,
+                             facets=facets))
+        assert (r.kind, r.reason) == ("exact", "shape")
+    finally:
+        for ix in (si, si_twin):
+            ix.close()
+
+
+def test_planner_gate_reasons(spark, skew_dirs, monkeypatch):
+    """Each gate reason the fixture reaches is reported on the exact
+    route it causes: shape, duplicate-terms, est_blocks (default gate),
+    deepening (a filter no candidate survives) and tombstones (a view
+    whose deletes exceed the override cap)."""
+    from yetisearch_spark import wand
+    from yetisearch_spark.query import parse_query
+
+    idx = _open(spark, skew_dirs, "uncached")
+    idx.pruned_gate_blocks = 0
+    for q, reason in {'"zzhead" NOT "zzrare"': "shape",
+                      "zzhead OR zzhead": "duplicate-terms"}.items():
+        r = idx.route(parse_query(q), 10)
+        assert (r.kind, r.reason) == ("exact", reason), q
+    nobody = idx._docs.where(F.col("role") == "nope").select("doc_id")
+    r = idx.route(parse_query("data"), 10, fids=nobody)
+    assert (r.kind, r.reason) == ("exact", "deepening")
+    idx.pruned_gate_blocks = None
+    r = idx.route(parse_query("zzhead"), 10)
+    assert (r.kind, r.reason) == ("exact", "est_blocks")
+    assert r.stats["est_blocks"] > 0
+    idx.close()
+
+    live = _open(spark, skew_dirs, "tombstoned")
+    live.pruned_gate_blocks = 0
+    try:
+        node = parse_query("zzhead")
+        r = live.route(node, 10)
+        assert (r.kind, r.stats["blocks_decoded"] > 0) == ("pruned", True)
+        page = _page(live._top(r, 10))
+        monkeypatch.setattr(wand, "OVERRIDES_TOMB_CAP", 0)
+        r = live.route(node, 10)
+        assert (r.kind, r.reason) == ("exact", "tombstones")
+        assert _page(live._top(r, 10)) == page
+    finally:
+        live.close()
+
+
 def test_weighted_tally_clamps_field_past_last_weight(spark, skew_dirs):
     """A position whose field index is ≥ len(weights) (a last field
     longer than 2^FIELD_SHIFT tokens) weighs as the last field in the
@@ -480,3 +610,22 @@ def test_corrupt_blocks_fail_loudly_through_both_routes(spark, skew_dirs,
                 assert got == sorted(want), (route, wp)
     finally:
         spark.conf.set(THRESHOLD, old)
+
+
+def test_corrupt_block_fails_loudly_in_tombstone_overrides(spark, skew_dirs,
+                                                           tmp_path):
+    """The tombstone overrides of the pruned tier decode with the same
+    batch kernel as the serving routes, so a corrupt block of a term a
+    victim holds raises the ValueError naming the term."""
+    ix = str(tmp_path / "tomb")
+    shutil.copytree(skew_dirs["tomb"], ix)
+    blobs = _corrupt_term_block(ix, "zzrare", CORRUPTIONS["cut_to_1"])
+    assert _well_formed(blobs[0], False) is None
+    live = GlobalSegmentedIndex(spark, ix, cache_postings=False,
+                                cache_docs=False)
+    try:
+        with pytest.raises(Exception) as err:
+            live._wand_block_overrides().count()
+        assert "term 'zzrare': corrupt posting block" in str(err.value)
+    finally:
+        live.close()

@@ -144,14 +144,14 @@ def test_facets_match_previous_sparkside_semantics(geo_engine):
     q = SearchQuery(query="search", facets={"role": {"limit": 2}})
     got = geo_engine.facets("g", q)["role"]
     _, idx = geo_engine._live("g")
-    matched = geo_engine._matches_with_docs(idx, q)
+    matched, handles = geo_engine._matches_with_docs(idx, q)
     sample = (matched.orderBy(F.desc("score"), F.asc("doc_id")).limit(1000))
     want = [{"value": r["role"], "count": r["count"]}
             for r in (sample.where(F.col("role").isNotNull())
                       .groupBy("role").count()
                       .orderBy(F.desc("count"), F.asc("role"))
                       .limit(2).collect())]
-    idx.release(getattr(matched, "_ys_handles", []))
+    idx.release(handles)
     assert got == want
 
 

@@ -200,7 +200,8 @@ def test_pruned_topk_over_segmented_view(spark, tmp_path):
     """WAND pruning must compose with GlobalSegmentedIndex's union
     relations (base + 2 appended segments, no deletes): pruned == exact
     on both driver and spark phase-1 paths (round-4 verdict order)."""
-    from yetisearch_spark.wand import pruned_topk
+    from yetisearch_spark.query import parse_query
+    from yetisearch_spark.wand import pruned_scored, pruned_topk
 
     pdf = generate_transcripts(900, seed=65)
     out = str(tmp_path / "wand_seg_idx")
@@ -214,7 +215,8 @@ def test_pruned_topk_over_segmented_view(spark, tmp_path):
     assert live._tomb is None
     for q in ["data", "data AND process", "error OR fail"]:
         got = pruned_topk(live, q, k=10, gate_blocks=0)
-        stats = getattr(got, "_pruning_stats", None)
+        stats = pruned_scored(live, parse_query(q), 10,
+                              gate_blocks=0)[1].get("prune_stats")
         assert stats is not None and not stats.get("gated"), (q, stats)
         a = [(r["doc_id"], r["score"]) for r in got.collect()]
         b = [(r["doc_id"], r["score"])

@@ -14,7 +14,7 @@ from yetisearch_spark.analyzer import analyze, analyze_batch
 from yetisearch_spark.corpus import generate_transcripts
 from yetisearch_spark.oracle import Fts5Oracle
 from yetisearch_spark.build import build_index
-from yetisearch_spark.query import SearchIndex
+from yetisearch_spark.query import SearchIndex, parse_query
 
 N_TURNS = 900
 SCORE_TOL = 1e-9
@@ -155,7 +155,7 @@ def test_weighted_phrase_near_pruned_identical(index, oracle):
     (range overlap over constituents — score-agnostic), so the frame is
     the COMPLETE match set with full positions, and reweighted scoring
     over it is exact. Pruned == FTS5 oracle at 1e-9, route asserted."""
-    from yetisearch_spark.wand import pruned_topk
+    from yetisearch_spark.wand import pruned_scored, pruned_topk
     terms = _pick_terms(oracle)
     t0, t1 = terms[0], terms[1]
     cases = {
@@ -174,7 +174,8 @@ def test_weighted_phrase_near_pruned_identical(index, oracle):
     for weights in [(2.0, 1.0), (0.5, 3.0), (5.0, 0.0)]:
         for kind, (q, match) in cases.items():
             df = pruned_topk(index, q, k=10, gate_blocks=0, wvec=weights)
-            stats = getattr(df, "_pruning_stats", None)
+            stats = pruned_scored(index, parse_query(q), 10, gate_blocks=0,
+                                  wvec=weights)[1].get("prune_stats")
             assert stats and "blocks_total" in stats, (kind, weights, stats)
             got = [(r["doc_id"], r["score"]) for r in df.collect()]
             want = oracle.top_k(match, k=10, weights=weights)
@@ -188,14 +189,15 @@ def test_weighted_wor_pruned_identical(index, oracle):
     weight-scaled bounds (slot weights multiply the same scaled lb/ub),
     and phase 2 reuses the exact path's weighted slot exprs. Pruned ==
     FTS5 oracle at 1e-9."""
-    from yetisearch_spark.wand import pruned_topk
+    from yetisearch_spark.wand import pruned_scored, pruned_topk
     terms = _pick_terms(oracle)
     t0, t1, t2 = terms[0], terms[1], terms[2]
     q = f'"{t0} {t1}" OR NEAR("{t1}" "{t2}", 10) OR "{t2}"'
     match = f'"{t0} {t1}" OR NEAR("{t1}" "{t2}", 10) OR "{t2}"'
     for weights in [(2.0, 1.0), (0.5, 3.0)]:
         df = pruned_topk(index, q, k=10, gate_blocks=0, wvec=weights)
-        stats = getattr(df, "_pruning_stats", None)
+        stats = pruned_scored(index, parse_query(q), 10, gate_blocks=0,
+                              wvec=weights)[1].get("prune_stats")
         assert stats and "blocks_total" in stats, (weights, stats)
         got = [(r["doc_id"], r["score"]) for r in df.collect()]
         want = oracle.top_k(match, k=10, weights=weights)
@@ -217,7 +219,8 @@ def test_weighted_pruned_facade_and_engine(spark, index, oracle):
         q = f'"{t0} {t1}"'
         match = Fts5Oracle.match_string("phrase", [t0, t1])
         df = routed.search(q, k=10, weights=(3.0, 0.5))
-        assert getattr(df, "_pruning_stats", None) is not None
+        assert routed.route(parse_query(q), 10,
+                            wvec=(3.0, 0.5)).kind == "pruned"
         got = [(r["doc_id"], r["score"]) for r in df.collect()]
         want = oracle.top_k(match, k=10, weights=(3.0, 0.5))
         _assert_identical(got, want, "facade-weighted-phrase")

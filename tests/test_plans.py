@@ -123,7 +123,7 @@ def test_wholestage_codegen_on_scoring(spark, index):
         # bypass the prepared-plan LRU (it would hand back the
         # AQE-compiled frame from the collect above)
         nodes = nodes_above_cache(index._match_scores_build(
-            parse_query("(data AND process) OR system"), None))
+            parse_query("(data AND process) OR system"), None).scores)
     assert not any("Join" in n for n in nodes), nodes
     assert len(_shuffles(nodes)) == 0, nodes
     assert any("HashAggregate" in n for n in nodes), nodes
@@ -146,7 +146,8 @@ def test_or_query_single_shuffle_any_width(spark, index):
     query length)."""
     with no_aqe(spark):
         node = _warm_hot(index, "data OR process OR system OR run")
-        nodes = nodes_above_cache(index._match_scores_build(node, None))
+        nodes = nodes_above_cache(
+            index._match_scores_build(node, None).scores)
     # co-partitioned caches: the union keeps hashpartitioning(doc_id), so
     # the scoring aggregation needs NO exchange at all (round 2 had one)
     assert len(_shuffles(nodes)) == 0, nodes
@@ -159,7 +160,8 @@ def test_and_query_is_shuffle_free_join(spark, index):
     lives inside the cached relation)."""
     with no_aqe(spark):
         node = _warm_hot(index, "data process system run check")
-        nodes = nodes_above_cache(index._match_scores_build(node, None))
+        nodes = nodes_above_cache(
+            index._match_scores_build(node, None).scores)
     assert len(_shuffles(nodes)) == 0, nodes
     # Catalyst may still COST-choose a broadcast for tiny cached frames;
     # what must never appear per-query is a shuffle exchange
@@ -171,7 +173,7 @@ def test_flat_or_skips_qualification_column(spark, index):
     collect_set/array_contains work through the shuffle."""
     with no_aqe(spark):
         node = _warm_hot(index, "data OR process OR system")
-        df = index._match_scores_build(node, None)
+        df = index._match_scores_build(node, None).scores
         nodes = nodes_above_cache(df)
         plan = _plan(df)
     assert "collect_set" not in plan, plan

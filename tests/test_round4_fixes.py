@@ -30,8 +30,9 @@ def test_pruned_equals_exact_under_tombstones(spark, tmp_path):
     from the deleted-df deltas — so pruned == exact at 1e-9 with the top
     former winners deleted (exactly the case that breaks naive bounds)."""
     from yetisearch_spark.query import SearchIndex
+    from yetisearch_spark.query import parse_query
     from yetisearch_spark.streaming import GlobalSegmentedIndex, delete_docs
-    from yetisearch_spark.wand import pruned_topk
+    from yetisearch_spark.wand import pruned_scored, pruned_topk
 
     out = str(tmp_path / "wand_tomb_route")
     pdf = generate_transcripts(400, seed=37)
@@ -47,7 +48,7 @@ def test_pruned_equals_exact_under_tombstones(spark, tmp_path):
     for q in ["search", "search OR data", "search AND data",
               '"search data"', 'NEAR("search" "data", 10)']:
         got = pruned_topk(live, q, k=10, gate_blocks=0)
-        stats = getattr(got, "_pruning_stats", None)
+        stats = pruned_scored(live, parse_query(q), 10, gate_blocks=0)[1]
         assert not (stats or {}).get("gated"), (q, stats)
         rows = [(r["doc_id"], round(r["score"], 9)) for r in got.collect()]
         exact = [(r["doc_id"], round(r["score"], 9))
@@ -204,8 +205,12 @@ def test_verify_index_and_debug_query(spark, two_indexes):
     assert "And" in out["ast"] or "Phrase" in out["ast"]
     assert "Physical Plan" in out["plan"]
 
-    out = debug_query(spark, two_indexes["a"], "data", k=5, pruned=True)
-    assert out["pruning"] is not None   # gated or pruned, always reported
+    out = debug_query(spark, two_indexes["a"], "data", k=5)
+    route = out["route"]                # gated or pruned, always reported
+    assert route["kind"] in ("pruned", "exact"), route
+    if route["kind"] == "exact":
+        assert route["reason"] == "est_blocks", route
+    assert route["stats"] is not None, route
 
 
 def test_verify_index_flags_missing_parts(spark, tmp_path):

@@ -6,7 +6,7 @@ import pytest
 
 from yetisearch_spark.build import build_index
 from yetisearch_spark.corpus import generate_transcripts
-from yetisearch_spark.query import SearchIndex
+from yetisearch_spark.query import SearchIndex, parse_query
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +46,7 @@ def test_searchindex_facade_routes_and_matches_exact(spark, idx_dir):
         got = routed.search(q, k=10)
         assert _rows(got) == _page(exact, q), q
         # the routed frame must actually have taken the pruned path
-        assert hasattr(got, "_pruning_stats"), q
+        assert routed.route(parse_query(q), 10).kind == "pruned", q
     exact.close()
     routed.close()
 
@@ -72,7 +72,7 @@ def test_searchindex_facade_default_gate_small_corpus(spark, idx_dir):
     ix = SearchIndex(spark, idx_dir, cache_postings=False, cache_docs=False)
     t = _common_terms(ix)
     df = ix.search(f'"{t[0]}"', k=10)
-    assert getattr(df, "_pruning_stats", None) is None
+    assert ix.route(parse_query(f'"{t[0]}"'), 10).kind == "exact"
     assert len(df.collect()) == 10
     ix.close()
 

@@ -250,3 +250,41 @@ def test_crash_after_rename_recovers_exact_state(spark, tmp_path,
         assert a[key] == pytest.approx(b[key], rel=1e-9), key
     live.close()
     cidx.close()
+
+
+def test_merge_settles_pending_delete_markers(spark, tmp_path):
+    """A delete marker left behind after its deltas committed must not
+    survive a merge: the merge rewrites deleted_df without the batch
+    tags, so a surviving marker would replay its deltas on the next
+    mutation and subtract df twice for victims still tombstoned outside
+    the merged segments."""
+    from yetisearch_spark.build import load_docs
+    from yetisearch_spark.streaming import compact
+
+    out, _ = _build_with_segments(spark, tmp_path, seed=73)
+    base_docs = load_docs(spark, out)
+    ids = [r["doc_id"] for r in base_docs.select("doc_id")
+           .orderBy("doc_id").limit(40).collect()]
+    delete_docs(spark, out, ids[:3])
+    # the crash window after the delta append: the committed batch's
+    # marker is still on disk
+    bid = (spark.read.option("mergeSchema", "true")
+           .parquet(os.path.join(out, "deleted_df"))
+           .select("batch").first()["batch"])
+    spark.createDataFrame([(d,) for d in ids[:3]], "doc_id long").write \
+        .parquet(os.path.join(out, "deleted_df_pending", bid))
+
+    merge_segments(spark, out, epochs=list_segments(out)[:2])
+    delete_docs(spark, out, [ids[30]])
+
+    terms = sorted({t for r in base_docs.where(
+        F.col("doc_id").isin(ids[:3] + [ids[30]])).select("tokens").collect()
+        for t in r["tokens"]})
+    live = GlobalSegmentedIndex(spark, out, cache_docs=False,
+                                cache_postings=False)
+    comp = str(tmp_path / "pending_compacted")
+    compact(spark, out, comp)
+    cidx = SearchIndex(spark, comp, cache_postings=False, cache_docs=False)
+    assert live.term_stats_for(terms) == cidx.term_stats_for(terms)
+    live.close()
+    cidx.close()

@@ -6,7 +6,8 @@ import pytest
 from yetisearch_spark.corpus import generate_transcripts
 from yetisearch_spark.build import build_index
 from yetisearch_spark.query import SearchIndex
-from yetisearch_spark.wand import pruned_topk
+from yetisearch_spark.query import parse_query
+from yetisearch_spark.wand import pruned_scored, pruned_topk
 
 
 @pytest.fixture(scope="module")
@@ -24,12 +25,19 @@ def _exact(index, q, k=10):
             for r in index.search(q, k=k).collect()]
 
 
+def _stats(index, q, k=10, **kw):
+    """wand's routing info for q: the gate dict when it routes to the
+    exact path, else the pruned tier's block counters."""
+    _, info = pruned_scored(index, parse_query(q), k, **kw)
+    return info if info.get("gated") else info.get("prune_stats")
+
+
 def _pruned(index, q, k=10):
     # gate_blocks=0: these tests exercise the pruning mechanics; the cost
     # gate (small corpora route to the exact path) is tested separately
     df = pruned_topk(index, q, k=k, gate_blocks=0)
     rows = [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
-    return rows, getattr(df, "_pruning_stats", None)
+    return rows, _stats(index, q, k, gate_blocks=0)
 
 
 def _common_terms(index, n=4):
@@ -148,7 +156,7 @@ def test_weighted_or_cold_phrase_df_routes_exact(spark, index):
     t, _ = _common_terms(index)
     q = f'"{t[0]} {t[1]}" OR "{t[2]}"'
     df = pruned_topk(cold, q, k=10, gate_blocks=0)
-    stats = getattr(df, "_pruning_stats", None)
+    stats = _stats(cold, q, gate_blocks=0)
     assert stats and stats.get("reason") == "cold-phrase-df"
     got = [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
     assert got == _exact(index, q)
@@ -170,7 +178,7 @@ def test_weighted_or_cold_phrase_df_fills_pruned(spark, index):
         assert fresh._df_count_cache.get(("ph", ph.terms)) is None
         df = pruned_topk(fresh, q, k=10, gate_blocks=0)
         got = [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
-        stats = getattr(df, "_pruning_stats", None)
+        stats = _stats(fresh, q, gate_blocks=0)
         # the route stayed pruned: stats are prune counters, not a
         # gated-with-reason dict
         assert stats is not None and "reason" not in stats, stats
@@ -183,7 +191,7 @@ def test_weighted_or_cold_phrase_df_fills_pruned(spark, index):
         q2 = f'"{t[0]} zzznope" OR "{t[2]}"'
         df2 = pruned_topk(fresh, q2, k=10, gate_blocks=0)
         got2 = [(r["doc_id"], round(r["score"], 9)) for r in df2.collect()]
-        s2 = getattr(df2, "_pruning_stats", None)
+        s2 = _stats(fresh, q2, gate_blocks=0)
         assert s2 is not None and "reason" not in s2, s2
         assert got2 == _exact(index, q2)
     finally:
@@ -275,7 +283,7 @@ def test_cost_gate_routes_small_queries_to_exact(index):
     terms, _ = _common_terms(index)
     q = f'"{terms[0]}" AND "{terms[1]}"'
     df = pruned_topk(index, q, k=10)  # default gate
-    stats = getattr(df, "_pruning_stats", None)
+    stats = _stats(index, q)
     assert stats is not None and stats.get("gated") is True
     got = [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
     assert got == _exact(index, q)
@@ -290,7 +298,7 @@ def test_duplicate_terms_route_to_exact_path(index):
     t = terms[0]
     for q in (f'"{t}" OR "{t}"', f'"{t}" AND "{t}"'):
         got = pruned_topk(index, q, k=10, gate_blocks=0)
-        stats = getattr(got, "_pruning_stats", None)
+        stats = _stats(index, q, gate_blocks=0)
         assert stats is not None and stats.get("reason") == "duplicate-terms"
         a = [(r["doc_id"], round(r["score"], 9)) for r in got.collect()]
         b = [(r["doc_id"], round(r["score"], 9))
@@ -355,7 +363,7 @@ def test_weighted_single_or_scaled_bounds_identical(index):
         for q in [f'"{terms[0]}"',
                   f'"{terms[0]}" OR "{terms[2]}" OR "{terms[3]}"']:
             df = pruned_topk(index, q, k=10, gate_blocks=0, wvec=wvec)
-            stats = getattr(df, "_pruning_stats", None)
+            stats = _stats(index, q, gate_blocks=0, wvec=wvec)
             assert stats and "blocks_total" in stats, (q, wvec, stats)
             got = [(r["doc_id"], round(r["score"], 9))
                    for r in df.collect()]

@@ -81,14 +81,18 @@ def verify_index(spark: SparkSession, index_dir: str) -> dict:
 
 
 def debug_query(spark: SparkSession, index_dir: str, query: str,
-                k: int = 10, pruned: bool = False) -> dict:
+                k: int = 10) -> dict:
     """Compiled AST + executed-plan dump for a query (the Spark analog of
     the reference's SQL + params + EXPLAIN QUERY PLAN). Returns
-    {query, ast, decode, plan, pruning} — ``plan`` is the formatted
-    physical plan string Catalyst would execute; ``decode`` lists each
-    per-term decode the plan made, in order: {term, positions, route
-    ("driver" or "executor"), est_bytes, threshold}, the estimate and
-    the limit it was compared against (the session's
+    {query, ast, route, decode, plan}. ``route`` is the planner's choice
+    for the query as SearchIndex.search serves it (SearchIndex.route):
+    {kind, reason, stats} — kind "pruned" or "exact", the gate reason
+    of an exact route, and the pruned tier's block counters (or the
+    block estimate that fell below the cost gate). ``plan`` is the
+    formatted physical plan string Catalyst would execute; ``decode``
+    lists each per-term decode the plan made, in order: {term,
+    positions, route ("driver" or "executor"), est_bytes, threshold},
+    the estimate and the limit it was compared against (the session's
     spark.sql.autoBroadcastJoinThreshold, capped at
     SearchIndex.DRIVER_DECODE_MAX_BYTES); both are None for a vocabulary
     too big to load, which always decodes on the executor. Terms never
@@ -101,12 +105,9 @@ def debug_query(spark: SparkSession, index_dir: str, query: str,
     node = parse_query(query)
     out: dict = {"query": query, "ast": repr(node)}
     with decode_scope() as scope:
-        if pruned:
-            from .wand import pruned_topk
-            df = pruned_topk(idx, node, k=k)
-            out["pruning"] = getattr(df, "_pruning_stats", None)
-        else:
-            df = idx.search(node, k=k)
+        r = idx.route(node, k)
+        df = idx._top(r, k)
+    out["route"] = {"kind": r.kind, "reason": r.reason, "stats": r.stats}
     out["decode"] = list(scope.routes.values())
     import io
     from contextlib import redirect_stdout

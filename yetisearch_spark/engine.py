@@ -25,7 +25,7 @@ from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .query import SearchIndex, parse_query
+from .query import SearchIndex, _after_cursor, parse_query
 from .rescoring import effective_limit, field_weighted_score
 
 
@@ -429,61 +429,15 @@ class Engine:
 
     # -- core search ---------------------------------------------------------
 
-    def _filtered_pruned_scores(self, idx: SearchIndex, node, fetch_n: int,
-                                filters: list, wvec):
-        """Round 7 (verdict order 1): engine-facade FILTERED single/OR
-        through iterative deepening — the unfiltered pruned top-k' is
-        page-exact in the total order, so when ≥ fetch_n of the k'
-        candidates survive the filter, the first fetch_n survivors ARE
-        the exact filtered page (same argument as
-        SearchIndex._filtered_pruned_page). The exact filtered TOTAL
-        comes from a position-FREE membership count: union of the query
-        terms' light decoded frames ∩ the filter ids — the same light
-        frames the exact path would read, minus its full scoring sort.
-        Returns (page_scores, count_frame) or None to fall through."""
-        from .wand import _is_simple, pruned_scored
-        ok, terms, sh = _is_simple(node)
-        if not ok or sh not in ("single", "or"):
-            return None
-        fids = apply_filters(idx._docs, filters).select("doc_id")
-        surv = None
-        for i, kp in enumerate((max(4 * fetch_n, 64),
-                                max(16 * fetch_n, 256))):
-            scored, info = pruned_scored(idx, node, kp,
-                                         gate_blocks=idx.pruned_gate_blocks,
-                                         wvec=wvec)
-            if scored is None:
-                return None          # shape/tombstone/estimate gate
-            topkp = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                     .limit(kp))
-            cand = fids.join(F.broadcast(topkp), "doc_id")
-            if cand.count() >= fetch_n:
-                surv = cand
-                break
-            if i == 1:
-                return None          # filter defeated both rounds
-        stats = idx.term_stats_for(sorted(set(terms)))
-        live = sorted(t for t in set(terms) if t in stats)
-        if not live:
-            return None
-        parts = [idx._decoded_for_term(t, with_positions=False)
-                 .select("doc_id") for t in live]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        if len(parts) > 1:
-            u = u.dropDuplicates()
-        return surv.select("doc_id", "score"), u.join(fids, "doc_id")
-
     def _matches_with_docs(self, idx: SearchIndex, q: SearchQuery,
-                           node=None) -> DataFrame:
+                           node=None) -> tuple[DataFrame, list]:
+        """→ (filtered docs ⋈ exact match scores, the handles to release
+        after the caller's jobs)."""
         if node is None:
             node = parse_query(q.query)
-        scores = idx.match_scores(node)
-        docs = apply_filters(idx._docs, q.filters)
-        out = docs.join(scores, "doc_id")
-        out._ys_handles = getattr(scores, "_ys_handles", [])  # type: ignore
-        return out
+        r = idx._exact(node, None)
+        return apply_filters(idx._docs, q.filters).join(r.scores,
+                                                        "doc_id"), r.handles
 
     _PAGE_PLAN_MAX = 128
 
@@ -662,27 +616,10 @@ class Engine:
                     and len(idx.fields) > 1 and node is not None
                     and not (q.sort or dist_sort or route_live))
 
-        # two-touch decode promotion: when this build first-touches a term
-        # (raw, not yet co-partitioned frame), the page plan must not be
-        # memoized either — the next identical query rebuilds over the
-        # promoted frames and THAT plan is the keeper
-        idx._plan_volatile = False
-        # Block-max pruned tier through the facade (round-5): eligible
-        # simple shapes whose block estimate clears the cost gate skip
-        # match_scores entirely — the page comes from the pruned scored
-        # frame, and the result TOTAL stays exact (single term: total =
-        # df, zero jobs, blocks of one term partition its docs; AND: the
-        # rule keeps every block that can hold an intersection doc, so
-        # the count branch over the pruned frame is exact). OR and the
-        # combined-fuzzy weighted-OR (round-6): page from the pruned
-        # frame, total by policy — default ``total_mode: exact`` runs
-        # wand's count-only plan (head df as a free base + a block-
-        # probed anti-join over the rare slots; position-free, never a
-        # full head decode), matching the reference's per-search COUNT
-        # (SearchEngine.php:207) without the 40× positional exact path.
         # O7 keyset cursor: strictly-after filter on RAW (score, doc_id).
         # Exact path only — the pruned tier's θ bounds the TOP-k, so
-        # blocks that cannot reach page 1 may still hold page n.
+        # blocks that cannot reach page 1 may still hold page n; the
+        # planner keeps a cursor page that needs a total exact.
         cursor_live = bool(q.search_after)
         if cursor_live and (docs_in_set or two_pass or overfetch
                             or q.offset or q.min_score > 0):
@@ -690,104 +627,47 @@ class Engine:
                 "search_after supports the standard relevance path only "
                 "(no sort/filters/facets/geo/fuzzy/boosts/offset/"
                 "min_score)")
-        scores = None
-        pruned_total: int | None = None
-        pruned_count: tuple | None = None   # (frame, base) count branch
-        total_deferred = False
-        total_mode_used = "exact"
-        # round 6: a docs_in_set query (filters/sort/facets/geo) can
-        # still route pruned when the shape's pruned frame is the
-        # COMPLETE match set (AND rule: and/phrase/near) — the frame is
-        # a drop-in for match_scores, so filters, sort, geo, rescoring,
-        # and the downstream filtered TOTAL all stay exact while the
-        # decode skips every block outside the rare constituent's
-        # ranges. Shapes with top-k-only frames (single/or/wor) keep the
-        # exact path under docs_in_set; the shape check is zero-job.
-        docs_in_set_ok = False
-        if docs_in_set and node is not None:
-            from .wand import _is_simple
-            ok_sh, _sh_terms, sh = _is_simple(node)
-            docs_in_set_ok = ok_sh and sh in ("and", "phrase", "near")
-        # round 7 (verdict order 1): a FILTERS-ONLY single/OR query (the
-        # most common real filtered shape) routes through the iterative
-        # deepening page + position-free exact filtered total instead of
-        # the full head decode; sorts/facets/aggregations/geo keep the
-        # exact docs_in_set path (they need the complete filtered set).
-        filtered_served = False
-        if (docs_in_set and q.filters and not q.sort and not route_live
-                and not persist_matched and not geo_live and not two_pass
-                and not cursor_live and node is not None
-                and (idx.pruned_gate_blocks is None
-                     or idx.pruned_gate_blocks >= 0)):
-            r = self._filtered_pruned_scores(
-                idx, node, fetch_n, q.filters,
-                idx._normalize_weights(bm25_weights))
-            if r is not None:
-                scores, cf = r
-                pruned_count = (cf, 0)
-                docs_in_set = False
-                filtered_served = True
-        if (scores is None and node is not None and not two_pass
-                and not cursor_live
-                and (not docs_in_set or docs_in_set_ok)
-                and (idx.pruned_gate_blocks is None
-                     or idx.pruned_gate_blocks >= 0)):
-            from .wand import pruned_scored
-            # field-weighted (multi-field boost) queries ride the pruned
-            # tier too (round 6): wand serves them for the complete-frame
-            # positional shapes (phrase/near — frame == full match set
-            # with positions, so reweighted scoring is exact) and gates
-            # every other shape back to match_scores ("weighted-shape").
-            ps, pinfo = pruned_scored(idx, node, fetch_n,
-                                      gate_blocks=idx.pruned_gate_blocks,
-                                      wvec=idx._normalize_weights(
-                                          bm25_weights))
-            if docs_in_set:
-                if ps is not None and pinfo.get("shape") in (
-                        "and", "phrase", "near"):
-                    scores = ps
-            elif ps is not None and pinfo.get("count_exact"):
-                scores = ps
-                pruned_total = pinfo.get("total")
-            elif ps is not None and pinfo.get("exact_count") is not None:
-                mode = str(self.config.get("total_mode", "exact"))
-                if mode == "estimate":
-                    scores = ps
-                    pruned_total = int(pinfo.get("total_estimate") or 0)
-                    total_mode_used = "estimate"
-                elif mode == "deferred":
-                    scores = ps
-                    total_deferred = True
-                    pruned_total = -1   # literal placeholder, fixed below
-                    total_mode_used = "deferred"
-                else:   # exact (default)
-                    cf, base = pinfo["exact_count"]()
-                    scores = ps
-                    if cf is None:
-                        pruned_total = int(base)
-                    else:
-                        pruned_count = (cf, int(base))
-            if scores is not None and pinfo.get("handles"):
-                # per-query persisted frames from the weighted-OR phase 2
-                # — released after the page action like exact-path tables
-                scores._ys_handles = pinfo["handles"]
-        if scores is None:
-            scores = idx.match_scores(node, weights=bm25_weights)
-        if getattr(idx, "_plan_volatile", False):
+        # one route decision (SearchIndex.route). A FILTERS-ONLY query
+        # (the most common real filtered shape) takes the filtered tier;
+        # sorts/facets/aggregations/geo need the complete filtered set,
+        # so only shapes whose pruned frame is the whole match set
+        # (AND/phrase/NEAR) may prune under them. Field-weighted
+        # (multi-field boost) queries ride the pruned tier too. Two-pass
+        # scores from the exact frame, like its primary-field pass.
+        wvec = idx._normalize_weights(bm25_weights)
+        filters_only = bool(q.filters) and not (
+            q.sort or route_live or persist_matched or geo_live)
+        if two_pass:
+            r = idx._exact(node, wvec)
+        else:
+            r = idx.route(
+                node, fetch_n,
+                fids=(apply_filters(idx._docs, q.filters).select("doc_id")
+                      if filters_only else None),
+                wvec=wvec,
+                after=tuple(q.search_after[:2]) if cursor_live else None,
+                total=str(self.config.get("total_mode", "exact")),
+                complete=docs_in_set)
+        filtered_served = r.kind == "filtered"
+        docs_in_set = docs_in_set and not filtered_served
+        total_mode_used = (r.stats or {}).get("total_mode", "exact")
+        scores = r.scores
+        # two-touch decode promotion: when this build first-touches a term
+        # (raw, not yet co-partitioned frame), the page plan must not be
+        # memoized either — the next identical query rebuilds over the
+        # promoted frames and THAT plan is the keeper
+        if r.volatile:
             plan_key = None
-        handles = getattr(scores, "_ys_handles", [])
+        # per-query persisted frames (exact-path match tables, the
+        # weighted-OR phase 2) — released after the page action
+        handles = r.handles
         matched = apply_filters(idx._docs, q.filters).join(scores, "doc_id") \
             if docs_in_set else scores
         if cursor_live:
             # page = next limit rows strictly after the cursor; TOTAL
             # stays the full match count (same value every page, like
-            # the offset path) via the unfiltered count branch
-            s_a, d_a = float(q.search_after[0]), int(q.search_after[1])
-            pruned_count = (scores, 0)
-            matched = matched.where(
-                (F.col("score") < F.lit(s_a))
-                | ((F.col("score") == F.lit(s_a))
-                   & (F.col("doc_id") > F.lit(d_a))))
+            # the offset path) via the route's unfiltered count branch
+            matched = _after_cursor(matched, q.search_after)
         if geo_live:
             need_distance = bool(dist_sort) or dw > 0 or "distance" in q.facets
             matched = self._apply_geo(matched, geo, geo_units, latc, lngc,
@@ -841,8 +721,8 @@ class Engine:
             else:
                 rows, total = self._page_and_total_enriched(
                     matched, idx._docs, fetch_n, plan_key=plan_key,
-                    total_literal=pruned_total, total_frame=pruned_count)
-            if total_deferred:
+                    total_literal=r.total, total_frame=r.count)
+            if total_mode_used == "deferred":
                 # deferred policy: the fetched-candidate count is the
                 # (lower-bound) total — no count plan ran at all
                 total = len(rows)
@@ -1055,9 +935,8 @@ class Engine:
                                                         fetch_n)
             return rows, total, []
         zero = {f: 0.0 for f in idx.fields}
-        s1 = idx.match_scores(node, weights={**zero, **pw})
-        extra_handles = getattr(s1, "_ys_handles", [])
-        s1 = (s1.where(F.col("score") > 0)
+        r1 = idx._exact(node, idx._normalize_weights({**zero, **pw}))
+        s1 = (r1.scores.where(F.col("score") > 0)
               .orderBy(F.desc("score"), F.asc("doc_id"))
               .limit(int(self.config["primary_field_limit"])))
         s2 = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_n)
@@ -1065,7 +944,7 @@ class Engine:
         enriched = idx._docs.join(F.broadcast(merged), "doc_id")
         rows = [r.asDict(recursive=True) for r in enriched.collect()]
         _sort_rows(rows, [("score", False), ("doc_id", True)])
-        return rows, len(rows), extra_handles
+        return rows, len(rows), r1.handles
 
     # -- K1: result cache ------------------------------------------------------
 
@@ -1133,11 +1012,11 @@ class Engine:
         if not q.query.strip():
             return self._with_geo(idx, apply_filters(idx._docs, q.filters),
                                   q).count()
-        matched = self._matches_with_docs(idx, q)
+        matched, handles = self._matches_with_docs(idx, q)
         try:
             return self._with_geo(idx, matched, q).count()
         finally:
-            idx.release(getattr(matched, "_ys_handles", []))
+            idx.release(handles)
 
     # -- facets / aggregations (A1-A5) ----------------------------------------
 
@@ -1154,8 +1033,8 @@ class Engine:
         release_handles = None
         if matched is None:
             _, idx = self._live(index)
-            matched = self._matches_with_docs(idx, q)
-            release_handles = (idx, getattr(matched, "_ys_handles", []))
+            matched, handles = self._matches_with_docs(idx, q)
+            release_handles = (idx, handles)
             matched = self._with_geo(idx, matched, q,
                                      need_distance="distance" in q.facets)
         try:
@@ -1242,8 +1121,8 @@ class Engine:
         release_handles = None
         if matched is None:
             _, idx = self._live(index)
-            matched = self._matches_with_docs(idx, q)
-            release_handles = (idx, getattr(matched, "_ys_handles", []))
+            matched, handles = self._matches_with_docs(idx, q)
+            release_handles = (idx, handles)
             matched = self._with_geo(idx, matched, q)
         try:
             row = matched.agg(*cols).collect()[0]

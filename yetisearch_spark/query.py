@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import contextvars
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
 import numpy as np
@@ -497,6 +497,45 @@ class DecodeScope:
     routes: dict = field(default_factory=dict)
 
 
+@dataclass
+class Route:
+    """One query's serving route (SearchIndex.route) and what its caller
+    reads the page and total from.
+
+    ``kind``: "filtered", "pruned" or "cursor" (the pruned tier with a
+    filter, alone, or after a keyset cursor), or "exact" (match_scores).
+    ``reason``: why an exact route skipped the pruned tier — wand's gate
+    reason ("shape", "duplicate-terms", "tombstones", "weighted-head",
+    "cold-phrase-df", "empty"), "est_blocks" (estimate below the cost
+    gate) or the planner's "disabled", "deepening" or "cursor"; None
+    for the other kinds. ``scores``: the (doc_id, score) rows of the
+    page; an exact route leaves the filter and cursor to its caller.
+    ``total`` / ``count``: the result total when asked for, a literal or
+    a (frame, base) count branch (total = base + rows of frame); both
+    None → count ``scores``. ``handles``: persisted frames to release()
+    after the page's jobs. ``stats``: the pruned tier's block counters,
+    {"est_blocks": n} when the estimate gated, plus "total_mode" for a
+    non-exact total policy. ``volatile``: the plan reads a first-touch
+    decode frame, so no caller may memoise a plan built over it."""
+    kind: str
+    reason: Optional[str]
+    scores: DataFrame
+    total: Optional[int] = None
+    count: Optional[tuple] = None
+    handles: list = field(default_factory=list)
+    stats: Optional[dict] = None
+    volatile: bool = False
+
+
+def _after_cursor(scores: DataFrame, after: tuple) -> DataFrame:
+    """Rows strictly after the keyset cursor (raw_score, doc_id) in the
+    (score DESC, doc_id ASC) order."""
+    s, d = float(after[0]), int(after[1])
+    return scores.where((F.col("score") < F.lit(s))
+                        | ((F.col("score") == F.lit(s))
+                           & (F.col("doc_id") > F.lit(d))))
+
+
 _SCOPE: contextvars.ContextVar = contextvars.ContextVar(
     "yetisearch_decode_scope", default=None)
 
@@ -823,6 +862,18 @@ class SearchIndex:
         while len(self._plan_cache) > self.PLAN_CACHE_MAX:
             self._plan_cache.popitem(last=False)
         return df
+
+    def _tracked(self, build) -> Route:
+        """Run one Route build and record on the Route whether it read a
+        first-touch decode frame; the flag still reaches an enclosing
+        _cached_plan level, as in _cached_plan itself."""
+        outer, self._plan_volatile = self._plan_volatile, False
+        try:
+            r = build()
+        finally:
+            volatile = self._plan_volatile
+            self._plan_volatile = outer or volatile
+        return replace(r, volatile=volatile) if r.volatile != volatile else r
 
     def _decoded_for_term(self, term: str,
                           with_positions: bool = True) -> DataFrame:
@@ -1592,12 +1643,20 @@ class SearchIndex:
         qualification evaluates the query tree against collect_set(slot)
         instead of joining per-child doc sets.
 
-        The returned frame carries ``_ys_handles`` — persisted per-query
-        match tables the caller should pass to release() after its jobs
-        finish (the engine does; unreleased handles are bounded by the
-        HANDLE_GROUPS_MAX registry)."""
+        The frame's persisted per-query match tables are in the
+        HANDLE_GROUPS_MAX registry; a caller that releases them after its
+        jobs uses _exact, whose Route carries them."""
+        return self._exact(node, self._normalize_weights(weights)).scores
+
+    def _exact(self, node, wvec) -> Route:
+        """The exact route: the complete match set scored by
+        _match_scores_build, memoised per (node, wvec); ``handles`` are
+        the persisted match tables the caller should pass to release()
+        after its jobs finish (the engine does; unreleased handles are
+        bounded by the HANDLE_GROUPS_MAX registry)."""
         if node is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return Route("exact", "empty", self.spark.createDataFrame(
+                [], "doc_id long, score double"))
         # retired raw frames (replaced by promoted co-partitioned twins
         # during an EARLIER query's plan build) are safe to drop now: that
         # query's action has run and materialized the swap. Caveat: a
@@ -1608,18 +1667,17 @@ class SearchIndex:
         for old in self._retired:
             old.unpersist()
         self._retired.clear()
-        wvec = self._normalize_weights(weights)
         with decode_scope():
-            return self._cached_plan(
+            return self._tracked(lambda: self._cached_plan(
                 ("ms", node, wvec),
-                lambda: self._match_scores_build(node, wvec))
+                lambda: self._match_scores_build(node, wvec)))
 
-    def _match_scores_build(self, node, wvec) -> DataFrame:
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
+    def _match_scores_build(self, node, wvec) -> Route:
         slots, phrase_tables, phrase_df, near_tables, handles = \
             self._plan(node, wvec)
         if not slots:
-            return empty
+            return Route("exact", None, self.spark.createDataFrame(
+                [], "doc_id long, score double"))
 
         def phrase_contrib(p):
             idf = self.idf(phrase_df[p])
@@ -1634,8 +1692,7 @@ class SearchIndex:
         if isinstance(node, (Phrase, PrefixNode)):
             out = phrase_tables[node].select(
                 "doc_id", phrase_contrib(node).alias("score"))
-            out._ys_handles = handles  # type: ignore[attr-defined]
-            return out
+            return Route("exact", None, out, handles=handles)
         if isinstance(node, Near):
             score = None
             for m in range(len(node.phrases)):
@@ -1644,8 +1701,7 @@ class SearchIndex:
                                        self.idf(phrase_df[node.phrases[m]]))
                 score = c if score is None else score + c
             out = near_tables[node].select("doc_id", score.alias("score"))
-            out._ys_handles = handles  # type: ignore[attr-defined]
-            return out
+            return Route("exact", None, out, handles=handles)
 
         # shuffle-free boolean fast paths over flat single-term trees.
         # Broadcast-join safety: every table except the largest must be
@@ -1691,8 +1747,7 @@ class SearchIndex:
             for name in cols:  # slot order == children order
                 score = F.col(name) if score is None else score + F.col(name)
             out = joined.select("doc_id", score.alias("score"))
-            out._ys_handles = handles  # type: ignore[attr-defined]
-            return out
+            return Route("exact", None, out, handles=handles)
 
         # (Two measured dead ends for shuffle-free OR, kept as notes: a
         # disjoint-subset decomposition — A∪B = (A∖B)∪(B∖A)∪(A∩B) with
@@ -1780,8 +1835,7 @@ class SearchIndex:
         else:
             out = (agg.where(_qual_expr(node, [0], present))
                    .select("doc_id", score.alias("score")))
-        out._ys_handles = handles  # type: ignore[attr-defined]
-        return out
+        return Route("exact", None, out, handles=handles)
 
     def _include_dead(self, node, phrase_df) -> bool:
         """Is a NOT node's include side DEAD in FTS5's doclist sense —
@@ -1925,81 +1979,42 @@ class SearchIndex:
         pagination path (O7 stretch): offset pagination sorts
         offset+k rows per page (page 10⁶ of a 10¹²-doc result set is a
         10⁷-row TakeOrdered per page), the cursor always sorts k.
-        Round 7: cursor pages route through the pruned tier by suffix
-        deepening (_cursor_pruned_page) — the after-cursor rows are a
-        contiguous SUFFIX of the total order, so a pruned top-k' with
-        ≥ k after-cursor survivors is page-exact; pages too deep for
-        the geometric rounds fall back to the exact path.
+
+        The serving route comes from route(); the page is its top k,
+        memoised with the route (_cached_plan).
 
         → (doc_id, score) [+ doc columns], best-first, ties by doc_id.
         """
         node = parse_query(query) if isinstance(query, str) else query
-        key = ("topk", node, k, self._normalize_weights(weights),
-               repr(sorted(filters.items())) if filters else None, with_docs,
-               self.pruned_gate_blocks,
-               (float(after[0]), int(after[1])) if after else None)
-        with decode_scope():
-            return self._cached_plan(
-                key, lambda: self._search_build(node, k, filters, with_docs,
-                                                weights, after=after))
-
-    def _search_build(self, node, k, filters, with_docs, weights,
-                      after: tuple | None = None) -> DataFrame:
-        # block-max pruned tier (D4 facade routing, round-5): eligible
-        # simple shapes with enough blocks to make pruning pay route
-        # through wand.pruned_scored; results are exactly the exact
-        # path's (pruned == exact is correctness-tested at 1e-9). Falls
-        # through on any gate reason (shape, tombstones, duplicates,
-        # below block estimate, empty).
-        # field-weighted queries (round 6): wvec rides into the pruned
-        # tier, which serves it for the complete-frame positional shapes
-        # (phrase/near) and gates everything else back here (reason
-        # "weighted-shape") — the gate is zero-job.
         wvec = self._normalize_weights(weights)
-        if (filters and node is not None and after is None
-                and (self.pruned_gate_blocks is None
-                     or self.pruned_gate_blocks >= 0)):
-            page = self._filtered_pruned_page(node, k, filters, with_docs,
-                                              wvec=wvec)
-            if page is not None:
-                return page
-        if (not filters and node is not None and after is None
-                and (self.pruned_gate_blocks is None
-                     or self.pruned_gate_blocks >= 0)):
-            from .wand import pruned_scored
-            scored, info = pruned_scored(self, node, k,
-                                         gate_blocks=self.pruned_gate_blocks,
-                                         wvec=wvec)
-            if scored is not None:
-                topk = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(k))
-                if with_docs:
-                    topk = (self._docs.join(F.broadcast(topk), "doc_id")
-                            .orderBy(F.desc("score"), F.asc("doc_id")))
-                topk._ys_handles = info.get(  # type: ignore[attr-defined]
-                    "handles", [])
-                topk._pruning_stats = info.get(  # type: ignore[attr-defined]
-                    "prune_stats")
-                return topk
-        if (after is not None and not filters and node is not None
-                and (self.pruned_gate_blocks is None
-                     or self.pruned_gate_blocks >= 0)):
-            page = self._cursor_pruned_page(node, k, after, with_docs, wvec)
-            if page is not None:
-                return page
-        scores = self.match_scores(node, weights=weights)
-        handles = getattr(scores, "_ys_handles", [])
-        if filters:
-            docs = self._docs
-            for col, val in filters.items():
-                docs = docs.where(F.col(col) == F.lit(val))
-            scores = scores.join(docs.select("doc_id"), "doc_id")
-        if after is not None:
-            s, d = float(after[0]), int(after[1])
-            scores = scores.where(
-                (F.col("score") < F.lit(s))
-                | ((F.col("score") == F.lit(s))
-                   & (F.col("doc_id") > F.lit(d))))
+        after = (float(after[0]), int(after[1])) if after else None
+
+        def build():
+            fids = None
+            if filters:
+                fids = self._docs
+                for col, val in filters.items():
+                    fids = fids.where(F.col(col) == F.lit(val))
+                fids = fids.select("doc_id")
+            r = self.route(node, k, fids=fids, wvec=wvec, after=after)
+            return self._top(r, k, fids=fids, after=after,
+                             with_docs=with_docs)
+        key = ("topk", node, k, wvec,
+               repr(sorted(filters.items())) if filters else None, with_docs,
+               self.pruned_gate_blocks, after)
+        return self._cached_plan(key, build)
+
+    def _top(self, r: Route, k: int, fids: DataFrame | None = None,
+             after: tuple | None = None,
+             with_docs: bool = False) -> DataFrame:
+        """The first k rows of a route's scores, applying the filter and
+        cursor an exact route leaves to its caller."""
+        scores = r.scores
+        if r.kind == "exact":
+            if fids is not None:
+                scores = scores.join(fids, "doc_id")
+            if after is not None:
+                scores = _after_cursor(scores, after)
         topk = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if with_docs:
             # hash join docs ⋈ broadcast(top-k): k rows broadcast, the big
@@ -2007,65 +2022,175 @@ class SearchIndex:
             # src/Storage/SqliteStorage.php:1017-1021)
             topk = (self._docs.join(F.broadcast(topk), "doc_id")
                     .orderBy(F.desc("score"), F.asc("doc_id")))
-        topk._ys_handles = handles  # type: ignore[attr-defined]
         return topk
 
-    def _filtered_pruned_page(self, node, k, filters, with_docs,
-                              wvec: tuple | None = None):
-        """Filtered search through the pruned tier by iterative
-        deepening (round 6). The unfiltered pruned top-k' is page-exact
-        in the total order (score DESC, doc_id ASC): every matching doc
-        OUTSIDE it ranks after every member, so when ≥ k of the k'
-        candidates survive the filter, the first k survivors ARE the
-        exact filtered top-k — including tie handling, since survivors
-        keep the same total order. Two rounds (k' = 4k then 16k) cover
-        ordinary filter selectivities at ≤ 2× the pruned cost; a filter
-        sparse enough to defeat both rounds returns None and the caller
-        falls through to the exact path (whose cost the deepening never
-        exceeds asymptotically — at 10^12 docs a head-term query with a
-        25%-selectivity filter is the difference between decoding 4k
-        candidates and decoding the full posting list). Reference
-        parity: filters are WHERE clauses over the same scored result
-        set (src/Storage/SqliteStorage.php:899-1016) — results are
-        identical, only the physical plan differs."""
+    def route(self, node, k: int, *, fids: DataFrame | None = None,
+              wvec: tuple | None = None, after: tuple | None = None,
+              total: str | None = None, complete: bool = False) -> Route:
+        """The one serving-route decision of SearchIndex.search and
+        Engine.search: filtered deepening → block-max pruned tier →
+        cursor deepening → exact path. Zero-job, except where a tier's
+        own phase-1 or deepening count runs.
+
+        ``k``: rows the caller reads from the top of (score DESC,
+        doc_id ASC). ``fids``: doc_id frame of a filter — the filtered
+        route; ``after``: keyset cursor — the cursor route; ``wvec``:
+        normalized field weights. ``total``: the result-total policy
+        (Engine ``total_mode``: "exact", "estimate" or "deferred"), or
+        None when no total is needed — then no count work runs.
+        ``complete``: the caller reads the whole match set (it sorts,
+        facets or joins doc columns over it), so only shapes whose
+        pruned frame IS the match set (AND/phrase/NEAR) may prune.
+
+        Reference analog: FTS5 makes this choice inside the one
+        SqliteStorage::search query (top-k pruning under ORDER BY rank
+        LIMIT, src/Storage/SqliteStorage.php:1104-1134)."""
+        with decode_scope():
+            return self._tracked(lambda: self._route(
+                node, k, fids, wvec, after, total, complete))
+
+    def _route(self, node, k, fids, wvec, after, total, complete) -> Route:
+        from .wand import _is_simple
+
+        info: dict = {"reason": "empty"}
+        gate = self.pruned_gate_blocks
+        if node is not None and gate is not None and gate < 0:
+            info = {"reason": "disabled"}
+        elif node is not None:
+            shape = _is_simple(node)[2]
+            if fids is not None and after is None:
+                r, info = self._filtered_tier(node, k, fids, wvec, total,
+                                              shape)
+            elif after is not None and (fids is not None
+                                        or total is not None):
+                # the cursor tier serves a bare page: its survivors are
+                # neither filtered nor count-complete, and the exact
+                # frame is the match set a filter or total needs anyway
+                r, info = None, {"reason": "cursor"}
+            elif after is not None:
+                r, info = self._cursor_tier(node, k, after, wvec)
+            elif complete and shape not in ("and", "phrase", "near"):
+                # single/OR/weighted-OR frames are top-k-exact, not the
+                # match set
+                r, info = None, {"reason": "shape"}
+            else:
+                r, info = self._pruned_tier(node, k, wvec,
+                                            None if complete else total)
+            if r is not None:
+                return r
+        exact = self._exact(node, wvec)
+        return replace(
+            exact, reason=info.get("reason", "est_blocks"),
+            stats=({"est_blocks": info["est_blocks"]}
+                   if "est_blocks" in info else None),
+            # an exact cursor page counts the whole match set; the
+            # caller cuts the page at the cursor
+            count=((exact.scores, 0)
+                   if after is not None and total is not None else None))
+
+    def _wand(self, node, k, wvec):
+        """wand.pruned_scored under this index's cost gate."""
         from .wand import pruned_scored
+        return pruned_scored(self, node, k,
+                             gate_blocks=self.pruned_gate_blocks, wvec=wvec)
 
-        fids = self._docs
-        for col, val in filters.items():
-            fids = fids.where(F.col(col) == F.lit(val))
-        fids = fids.select("doc_id")
+    def _pruned_tier(self, node, k, wvec, total):
+        """Block-max pruned tier (D4 facade routing, round 5) through
+        wand.pruned_scored; pruned == exact is correctness-tested at 1e-9.
+        Field-weighted queries ride in with wvec; wand gates the shapes
+        it cannot serve weighted, with zero jobs. Totals, when asked for:
+        single term — df, zero jobs; AND/phrase/NEAR — the frame is the
+        whole match set, so it is counted. OR and the combined-fuzzy
+        weighted-OR frames are page-exact but not count-complete, so the
+        total follows the policy: "exact" runs wand's count-only plan
+        (head df as a free base + a block-probed anti-join over the rare
+        slots; position-free, never a full head decode), the reference's
+        per-search COUNT (SearchEngine.php:207) without the 40×
+        positional exact path; "estimate" is the zero-job df-sum upper
+        bound; "deferred" counts nothing (the caller reports its fetched
+        candidates).
+        → (Route or None, wand's info)."""
+        scored, info = self._wand(node, k, wvec)
+        if scored is None:
+            return None, info
+        r = Route("pruned", None, scored, handles=info.get("handles", []),
+                  stats=info.get("prune_stats"))
+        if total is None:
+            return r, info
+        if info.get("count_exact"):
+            r.total = info.get("total")
+        elif total in ("estimate", "deferred"):
+            # deferred: -1 is a literal placeholder; the caller replaces
+            # it with its fetched-candidate count
+            r.total = (int(info.get("total_estimate") or 0)
+                       if total == "estimate" else -1)
+            r.stats = {**(r.stats or {}), "total_mode": total}
+        else:
+            cf, base = info["exact_count"]()
+            if cf is None:
+                r.total = int(base)
+            else:
+                r.count = (cf, int(base))
+        return r, info
 
-        surv = None
-        rounds = (max(4 * k, 64), max(16 * k, 256))
-        for i, kp in enumerate(rounds):
-            scored, info = pruned_scored(
-                self, node, kp, gate_blocks=self.pruned_gate_blocks,
-                wvec=wvec)
+    def _filtered_tier(self, node, k, fids, wvec, total, shape):
+        """Filtered search through the pruned tier (rounds 6-7). An
+        AND/phrase/NEAR frame is the COMPLETE match set, so it is
+        filtered directly. Single/OR (and the weighted-OR when no total
+        is asked for) deepen: the unfiltered pruned top-k' is page-exact
+        in the total order (score DESC, doc_id ASC) — every matching doc
+        outside it ranks after every member — so when ≥ k of the k'
+        candidates survive the filter, the first k survivors ARE the
+        exact filtered top-k, ties included. Two rounds (k' = 4k, 16k)
+        cover ordinary selectivities at ≤ 2× the pruned cost; a filter
+        that defeats both falls through to the exact path (at 10^12
+        docs, decoding 4k candidates instead of a head term's full
+        posting list). Reference parity: filters are WHERE clauses over
+        the same scored result set (src/Storage/SqliteStorage.php:
+        899-1016). The exact filtered TOTAL of a deepened page is a
+        position-FREE membership count: the union of the query terms'
+        light frames ∩ the filter ids. A weighted-OR's phrase/NEAR slots
+        have no such count, so with a total it takes the exact path."""
+        from .wand import _is_simple
+
+        if shape in ("and", "phrase", "near"):
+            scored, info = self._wand(node, k, wvec)
             if scored is None:
-                return None          # shape/tombstone/estimate gate
-            if info.get("shape") in ("and", "phrase", "near"):
-                # the AND-rule pruned frame is the COMPLETE match set
-                # (count-exact) — filter directly, no deepening needed
-                surv = scored.join(fids, "doc_id")
-                break
+                return None, info    # shape/tombstone/estimate gate
+            return Route("filtered", None, scored.join(fids, "doc_id"),
+                         stats=info.get("prune_stats")), info
+        if total is not None and shape not in ("single", "or"):
+            return None, {"reason": "shape"}
+        for kp in (max(4 * k, 64), max(16 * k, 256)):
+            scored, info = self._wand(node, kp, wvec)
+            if scored is None:
+                return None, info    # shape/tombstone/estimate gate
             topkp = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
                      .limit(kp))
             # broadcast the k' candidate page; the docs scan keeps its
             # pushed-down filter predicates
             cand = fids.join(F.broadcast(topkp), "doc_id")
             if cand.count() >= k:
-                surv = cand
                 break
-            if i == len(rounds) - 1:
-                return None          # filter defeated both rounds
-        topk = (surv.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        if with_docs:
-            topk = (self._docs.join(F.broadcast(topk), "doc_id")
-                    .orderBy(F.desc("score"), F.asc("doc_id")))
-        return topk
+        else:
+            return None, {"reason": "deepening"}
+        r = Route("filtered", None, cand, handles=info.get("handles", []),
+                  stats=info.get("prune_stats"))
+        if total is not None:
+            terms = _is_simple(node)[1]
+            stats = self.term_stats_for(sorted(set(terms)))
+            parts = [self._decoded_for_term(t, with_positions=False)
+                     .select("doc_id")
+                     for t in sorted(t for t in set(terms) if t in stats)]
+            u = parts[0]
+            for p in parts[1:]:
+                u = u.unionByName(p)
+            if len(parts) > 1:
+                u = u.dropDuplicates()
+            r.count = (u.join(fids, "doc_id"), 0)
+        return r, info
 
-    def _cursor_pruned_page(self, node, k, after, with_docs,
-                            wvec: tuple | None = None):
+    def _cursor_tier(self, node, k, after, wvec):
         """Cursor pages through the pruned tier by SUFFIX deepening
         (round 7, verdict order 3). The pruned top-k' is the exact first
         k' rows of the total order (score DESC, doc_id ASC); the
@@ -2074,12 +2199,10 @@ class SearchIndex:
         them ARE the exact next page — and when k' ≥ n_docs the pruned
         frame holds every match, so fewer survivors is just the final
         page. k' grows geometrically (total cost ≤ ~2× the last round);
-        a cursor deeper than the cap returns None and the caller falls
-        back to the exact path. With the default cost gate the deep
-        rounds also self-gate: the per-k gate floor grows with k', so
-        pruning only engages where the block count justifies it."""
-        from .wand import pruned_scored
-        s_a, d_a = float(after[0]), int(after[1])
+        a cursor deeper than the cap falls back to the exact path. With
+        the default cost gate the deep rounds also self-gate: the per-k
+        gate floor grows with k', so pruning only engages where the
+        block count justifies it."""
         kp = max(4 * k, 64)
         # two rounds, like the filtered deepening: a page-by-page cursor
         # walk (the real serving pattern — each next page sits ~k ranks
@@ -2090,11 +2213,9 @@ class SearchIndex:
         # rank-1000 re-entry bails to exact via the bite-check below.)
         cap = max(16 * k, 256)
         while kp <= cap:
-            scored, info = pruned_scored(self, node, kp,
-                                         gate_blocks=self.pruned_gate_blocks,
-                                         wvec=wvec)
+            scored, info = self._wand(node, kp, wvec)
             if scored is None:
-                return None          # shape/tombstone/estimate gate
+                return None, info    # shape/tombstone/estimate gate
             ps = info.get("prune_stats")
             if ps and ps.get("blocks_total") \
                     and ps["blocks_decoded"] > 0.5 * ps["blocks_total"]:
@@ -2102,13 +2223,10 @@ class SearchIndex:
                 # the weakened k'-th bound no longer excludes blocks):
                 # this round ≈ a full decode, and deeper rounds only get
                 # worse; the exact path does that one full pass better
-                return None
+                return None, {"reason": "deepening"}
             topkp = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
                      .limit(kp))
-            surv = topkp.where(
-                (F.col("score") < F.lit(s_a))
-                | ((F.col("score") == F.lit(s_a))
-                   & (F.col("doc_id") > F.lit(d_a)))).persist()
+            surv = _after_cursor(topkp, after).persist()
             n_surv = surv.count()
             if n_surv >= k or kp >= int(self.n_docs):
                 # ≥ k survivors → page-exact; k' ≥ n_docs → the pruned
@@ -2116,16 +2234,11 @@ class SearchIndex:
                 # page. The persisted survivors feed the page action
                 # directly (no recompute of the round).
                 self._register_handles([surv])
-                topk = (surv.orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(k))
-                if with_docs:
-                    topk = (self._docs.join(F.broadcast(topk), "doc_id")
-                            .orderBy(F.desc("score"), F.asc("doc_id")))
-                topk._ys_handles = [surv]  # type: ignore[attr-defined]
-                return topk
+                return Route("cursor", None, surv, handles=[surv],
+                             stats=ps), info
             surv.unpersist()
             kp *= 4
-        return None                  # cursor too deep for the rounds
+        return None, {"reason": "deepening"}  # cursor too deep for the rounds
 
     def count(self, query) -> int:
         """Match count (reference M8, src/Storage/SqliteStorage.php:1275-1358)."""

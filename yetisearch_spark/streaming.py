@@ -420,6 +420,33 @@ class SegmentedIndex:
         return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _override_rows(batches):
+    """mapInArrow kernel of the tombstone overrides: (term, min_doc,
+    data) block rows → one (term, min_doc, doc_id, tf, doc_len) row per
+    posting, decoded by the serving routes' batch kernel
+    (query._decode_blocks), so a corrupt block raises the same
+    ValueError naming its term."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .query import _decode_blocks, _posting_columns
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        col = batch.schema.get_field_index
+        terms = batch.column(col("term"))
+        out = _decode_blocks(batch.column(col("data")), False, terms)
+        if out[1].size == 0:
+            continue
+        idx = pa.array(np.repeat(np.arange(batch.num_rows, dtype=np.int64),
+                                 out[0]))
+        yield pa.record_batch(
+            [terms.take(idx), batch.column(col("min_doc")).take(idx)]
+            + _posting_columns(out, False),
+            names=["term", "min_doc", "doc_id", "tf", "doc_len"])
+
+
 class GlobalSegmentedIndex(SearchIndex):
     """Serving view over base + committed segments minus tombstones with
     EXACT GLOBAL BM25 statistics: one logical SearchIndex whose postings
@@ -563,10 +590,7 @@ class GlobalSegmentedIndex(SearchIndex):
         cached = getattr(self, "_overrides_df", None)
         if cached is not None:
             return cached
-        import numpy as np
-        import pandas as pd
-
-        from .postings import BM25_B, BM25_K1, decode_posting_block
+        from .postings import BM25_B, BM25_K1
 
         vic_terms = (self._docs_raw.join(self._tomb, "doc_id", "left_semi")
                      .select("doc_id", F.explode("tokens").alias("term"))
@@ -582,29 +606,8 @@ class GlobalSegmentedIndex(SearchIndex):
                       "left_semi")
                 .select("term", "min_doc", "data"))
 
-        def rows_kernel(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ts, ms, dids, tfs, dls = [], [], [], [], []
-                for term, mind, data in zip(pdf["term"], pdf["min_doc"],
-                                            pdf["data"]):
-                    ids, tf, dl = decode_posting_block(data)
-                    n = ids.size
-                    ts.append(np.repeat(term, n))
-                    ms.append(np.repeat(np.int64(mind), n))
-                    dids.append(ids)
-                    tfs.append(tf)
-                    dls.append(dl)
-                yield pd.DataFrame({
-                    "term": np.concatenate(ts),
-                    "min_doc": np.concatenate(ms),
-                    "doc_id": np.concatenate(dids),
-                    "tf": np.concatenate(tfs).astype(np.int32),
-                    "doc_len": np.concatenate(dls).astype(np.int32)})
-
-        rows = scan.mapInPandas(
-            rows_kernel,
+        rows = scan.mapInArrow(
+            _override_rows,
             "term string, min_doc long, doc_id long, tf int, doc_len int")
         rows = rows.join(self._tomb.select("doc_id"), "doc_id", "left_anti")
         tf = F.col("tf").cast("double")
@@ -747,6 +750,10 @@ def merge_segments(spark: SparkSession, index_dir: str,
     from .build import load_docs
 
     _finish_interrupted_merge(index_dir)
+    # settle crashed delete batches first: the rewrite below drops the
+    # deltas' batch tags, and a marker left behind would then replay its
+    # (already applied) deltas a second time
+    _replay_pending_deltas(spark, index_dir)
     segs = list_segments(index_dir)
     if epochs is None:
         by_size = sorted(segs, key=lambda e: _doc_count(

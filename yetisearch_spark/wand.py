@@ -400,15 +400,9 @@ def pruned_topk(index: SearchIndex, query, k: int = 10,
     if scored is None:
         if info.get("reason") == "empty":
             return index.spark.createDataFrame([], "doc_id long, score double")
-        # .select("*") wraps the (possibly plan-cache-shared) frame so the
-        # routing marker never leaks onto other callers' handles
-        out = index.search(node, k=k, weights=wvec).select("*")
-        out._pruning_stats = info  # type: ignore[attr-defined]
-        return out
-    out = (scored.select("doc_id", "score")
-           .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    out._pruning_stats = info.get("prune_stats")  # type: ignore[attr-defined]
-    return out
+        return index.search(node, k=k, weights=wvec)
+    return (scored.select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def pruned_scored(index: SearchIndex, node, k: int,
@@ -422,9 +416,10 @@ def pruned_scored(index: SearchIndex, node, k: int,
     exact path (info["gated"]=True with a reason) or can match nothing
     (info["reason"]="empty").
 
-    The facade (SearchIndex.search / Engine.search) consumes this: the
-    top-k page comes from ``scored.orderBy(...).limit(k)``, and — for
-    result totals — info["total"] is the EXACT match count for shape
+    The route planner (SearchIndex.route, behind SearchIndex.search and
+    Engine.search) consumes this: the top-k page comes from
+    ``scored.orderBy(...).limit(k)``, and — for result totals —
+    info["total"] is the EXACT match count for shape
     "single" (the term's df: blocks of one term partition its docs), and
     info["count_exact"]=True for shape "and" (the AND rule keeps every
     block that can hold an intersection doc, so counting ``scored`` is
