@@ -4,7 +4,9 @@
 Measures (a) the headline operator queries over $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and (b) the real inverted-index build +
 BM25 query path over a deterministic synthetic transcript corpus
-(BENCH_TURNS turns, default 200k), on local[$SPARK_GRAFT_CPUS].
+(BENCH_TURNS turns, default 1,000,000), on local[$SPARK_GRAFT_CPUS].
+SPARK_GRAFT_CPUS defaults to the cores this process may run on and
+BENCH_DRIVER_MEM to perfbench's driver size (a quarter of RAM, 1–4 GiB).
 
 Output: {"metric": ..., "value": <total headline seconds>, "unit": "sec",
          "queries": {name: sec}, "sf": ..., plus build/query throughput
@@ -21,8 +23,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 os.environ["PYTHONPATH"] = (os.path.dirname(os.path.abspath(__file__))
                             + os.pathsep + os.environ.get("PYTHONPATH", ""))
 
+from perfbench.box import driver_memory_mb, nproc  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(nproc())))
 BENCH_TURNS = int(os.environ.get("BENCH_TURNS", "1000000"))
 WORK_DIR = os.environ.get("BENCH_WORK_DIR", "/tmp/yetisearch_bench")
 
@@ -41,7 +45,8 @@ def main() -> None:
         # this the cached scoring shuffles keep CPUS-wide tiny partitions
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get(
+            "BENCH_DRIVER_MEM", f"{driver_memory_mb()}m"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

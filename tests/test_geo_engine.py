@@ -169,3 +169,19 @@ def test_two_pass_search_r7(spark, tmp_path_factory):
     from yetisearch_spark.analyzer import analyze
     top = res["results"][0]["document"]
     assert "data" in analyze(top["title"] or "")
+
+    # a filter bounds both passes and the enriched page: every row is a
+    # user turn, and the total counts only the filtered candidates (the
+    # single-pass filtered engine's exact count; "data" matches 2 user
+    # turns among its 7 matches, so the whole filtered set fits the page)
+    filt = [{"field": "role", "operator": "=", "value": "user"}]
+    res_f = eng.search("tp", SearchQuery(query="data", limit=10,
+                                         bypass_cache=True, filters=filt))
+    one_pass = Engine(spark, {"tp": out},
+                      config={"field_weights": {"title": 3.0, "text": 1.0}})
+    want = one_pass.search("tp", SearchQuery(query="data", limit=10,
+                                             bypass_cache=True,
+                                             filters=filt))
+    assert res_f["results"]
+    assert all(r["document"]["role"] == "user" for r in res_f["results"])
+    assert res_f["total"] == want["total"] == len(res_f["results"])

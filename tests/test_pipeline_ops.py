@@ -1,5 +1,5 @@
 """Training-pipeline operators: dedup families, text stats, similarity
-search, multimodal plumbing."""
+search."""
 
 import numpy as np
 import pytest
@@ -284,50 +284,6 @@ def test_ivf(embeddings):
     rows = ivf_cosine_topk(indexed, cents, base[0], k=3, nprobe=3).collect()
     assert rows and rows[0]["vec_id"] == 0
     indexed.unpersist()
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    from yetisearch_spark.multimodal import MEDIA_SCHEMA
-    rows = [
-        (0, "image", b"\x89PNGfakebytes0", {"width": "32", "height": "16"}),
-        (1, "image", b"\x89PNGfakebytes1", {"width": "8", "height": "8"}),
-        (2, "audio", b"RIFFfakeaudio" * 100, {"sample_rate": "8000"}),
-        (3, "video", b"\x00\x00ftypfakevid", {"duration_ms": "3500"}),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_multimodal_image_plumbing(media):
-    from yetisearch_spark.multimodal import image_features
-    rows = image_features(media, feature_dim=8, deterministic_fake=True).collect()
-    assert len(rows) == 2
-    by_id = {r["media_id"]: r for r in rows}
-    assert by_id[0]["width"] == 32 and by_id[0]["channels"] == 3
-    assert len(by_id[0]["features"]) == 8
-    # deterministic across runs
-    rows2 = image_features(media, feature_dim=8, deterministic_fake=True).collect()
-    assert {r["media_id"]: r["features"] for r in rows2} == \
-        {r["media_id"]: r["features"] for r in rows}
-
-
-def test_multimodal_undecodable_rows_quarantine_as_nulls(media):
-    """Real decode path: payloads in unknown formats surface NULL columns
-    instead of failing the job (tests/test_multimodal_real.py covers the
-    successful PNG/BMP/WAV decodes)."""
-    from yetisearch_spark.multimodal import image_features
-    rows = image_features(media, deterministic_fake=False).collect()
-    assert len(rows) == 2  # both fake-PNG image rows quarantine
-    assert all(r["width"] is None and r["features"] is None for r in rows)
-
-
-def test_multimodal_audio_video(media):
-    from yetisearch_spark.multimodal import audio_features, sample_video_frames
-    arow = audio_features(media, deterministic_fake=True).collect()
-    assert len(arow) == 1 and arow[0]["sample_rate"] == 8000
-    frames = sample_video_frames(media, deterministic_fake=True).collect()
-    assert len(frames) == 3  # 3500ms // 1000ms
-    assert [f["frame_idx"] for f in frames] == [0, 1, 2]
 
 
 def test_embedding_cosine_near_dup_lsh_matches_exact(spark):

@@ -6,7 +6,6 @@ from hypothesis import given, settings, strategies as st
 
 from yetisearch_spark.postings import (decode_posting_block, decode_varints,
                                        encode_posting_block, encode_varints)
-from yetisearch_spark.imagecodec import decode_png, encode_png
 from yetisearch_spark.chunking import chunk_text
 
 
@@ -45,21 +44,6 @@ def test_posting_block_roundtrip(data):
     assert dls2.tolist() == doc_lens.tolist()
     for a, b in zip(positions, pos2):
         assert list(a) == list(b)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.data())
-def test_png_roundtrip_random(data):
-    h = data.draw(st.integers(min_value=1, max_value=24))
-    w = data.draw(st.integers(min_value=1, max_value=24))
-    c = data.draw(st.sampled_from([1, 2, 3, 4]))
-    ftype = data.draw(st.sampled_from([0, 1, 2, 3, 4]))
-    seed = data.draw(st.integers(min_value=0, max_value=2**31))
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-    out = decode_png(encode_png(img, filter_type=ftype))
-    assert out.shape == img.shape
-    assert (out == img).all()
 
 
 @settings(max_examples=100, deadline=None)

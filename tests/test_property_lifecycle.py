@@ -5,6 +5,8 @@ build of the logical document state: same match sets while segmented
 (score drift from delete-df residue is the documented approximation),
 and score-identical at 1e-9 after compaction."""
 
+import shutil
+
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -22,23 +24,33 @@ def _key(row):
     return (row["conv_id"], int(row["turn_idx"]))
 
 
+@pytest.fixture(scope="module")
+def base_index(spark, tmp_path_factory):
+    """The 350-turn base index every example starts from, built once;
+    each example mutates its own copy. → (index dir, base rows, pool)."""
+    pdf = generate_transcripts(700, seed=55)
+    pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    base, pool = pdf.iloc[:350], pdf.iloc[350:].reset_index(drop=True)
+    out = str(tmp_path_factory.mktemp("prop_life_base") / "idx")
+    build_index(spark, spark.createDataFrame(base), out, num_buckets=8)
+    return out, base, pool
+
+
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 @given(data=st.data())
-def test_random_mutation_sequences(data, spark, tmp_path_factory):
+def test_random_mutation_sequences(data, spark, tmp_path_factory,
+                                   base_index):
     from yetisearch_spark.engine import Engine, SearchQuery
     from yetisearch_spark.streaming import (compact_in_place,
                                             delete_by_conv_prefix,
                                             list_segments,
                                             upsert_documents)
 
-    pdf = generate_transcripts(700, seed=55)
-    pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    base, pool = pdf.iloc[:350], pdf.iloc[350:].reset_index(drop=True)
-
+    base_dir, base, pool = base_index
     out = str(tmp_path_factory.mktemp("prop_life") / "idx")
-    build_index(spark, spark.createDataFrame(base), out, num_buckets=8)
+    shutil.copytree(base_dir, out)
     eng = Engine(spark, {"m": out})
     # logical state: key -> text (what a correct engine must serve)
     state = {_key(r): r["text"] for _, r in base.iterrows()}

@@ -75,3 +75,14 @@ def test_build_kernel_exact_content(spark, tmp_path, multi):
     assert set(got) == set(ref)
     for t in ref:
         assert got[t] == ref[t], f"term {t!r} mismatch"
+
+
+def test_binary_offsets_refuse_2gib_batch():
+    """The kernel's data column has int32 offsets: a batch reaching
+    2**31 bytes must fail loudly instead of wrapping."""
+    from yetisearch_spark.build import _binary_offsets
+
+    ok = _binary_offsets(np.array([0, 5, 2**31 - 1], dtype=np.int64))
+    assert ok.dtype == np.int32 and ok.tolist() == [0, 5, 2**31 - 1]
+    with pytest.raises(ValueError, match="2 GiB"):
+        _binary_offsets(np.array([0, 2**31], dtype=np.int64))

@@ -131,10 +131,11 @@ def test_high_water_never_reallocates_live_ids(spark, tmp_path):
 
 
 def test_appends_after_auto_merge_are_not_swallowed(spark, tmp_path):
-    """Pinned (found by scripts/bench_merge.py): the merged segment used
-    to take epoch max+1, colliding with the caller's NEXT batch id —
-    append_segment would resume into the merged dir and silently DROP
-    that batch. Sequential batch ids across auto-merges must all land."""
+    """Pinned (found by a tiered-compaction benchmark run): the merged
+    segment used to take epoch max+1, colliding with the caller's NEXT
+    batch id — append_segment would resume into the merged dir and
+    silently DROP that batch. Sequential batch ids across auto-merges
+    must all land."""
     pdf = generate_transcripts(400 + 6 * 50, seed=76)
     pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     out = str(tmp_path / "seq_idx")

@@ -145,6 +145,16 @@ _ENCODED_SCHEMA = StructType([
 ])
 
 
+def _binary_offsets(offs: np.ndarray) -> np.ndarray:
+    """Block byte offsets as the int32 offsets of an Arrow ``binary``
+    column. A batch whose blocks reach 2 GiB would wrap them, so it is
+    refused instead."""
+    if offs.size and int(offs[-1]) >= 2**31:
+        raise ValueError(f"posting batch of {int(offs[-1])} bytes exceeds "
+                         "the 2 GiB binary-column limit")
+    return offs.astype(np.int32)
+
+
 def _runs_kernel_factory(avgdl: float, block_size: int, num_salts: int,
                          multi_field: bool = False):
     """mapInArrow over docs splits → per-split posting runs in FINAL block
@@ -255,7 +265,7 @@ def _runs_kernel_factory(avgdl: float, block_size: int, num_salts: int,
                 continue
             data_col = pa.Array.from_buffers(
                 pa.binary(), B,
-                [None, pa.py_buffer(d_offs.astype(np.int32)),
+                [None, pa.py_buffer(_binary_offsets(d_offs)),
                  pa.py_buffer(d_buf)])
             yield pa.record_batch(
                 [vocab.take(pa.array(b_code)),

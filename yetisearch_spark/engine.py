@@ -924,24 +924,31 @@ class Engine:
                        q: SearchQuery, fetch_n: int):
         """R7: primary-field pass (doubled weights, zero elsewhere) merged
         over the standard pass with a ×1.5 boost, deduped keeping pass-1
-        (reference: SearchEngine.php:139-203). Total is the merged
-        candidate count, as in the reference."""
+        (reference: SearchEngine.php:139-203). Both passes see only the
+        docs inside ``q.filters``. Total is the merged candidate count,
+        as in the reference."""
         from .rescoring import two_pass_search
+        docs = apply_filters(idx._docs, q.filters)
+
+        def inside(frame):
+            return (frame.join(docs.select("doc_id"), "doc_id", "left_semi")
+                    if q.filters else frame)
+
+        scores = inside(scores)
         pw = {f: float(self.config["field_weights"][f]) * 2.0
               for f in self.config["primary_fields"]
               if f in self.config["field_weights"]}
         if not pw:
-            rows, total = self._page_and_total_enriched(scores, idx._docs,
-                                                        fetch_n)
+            rows, total = self._page_and_total_enriched(scores, docs, fetch_n)
             return rows, total, []
         zero = {f: 0.0 for f in idx.fields}
         r1 = idx._exact(node, idx._normalize_weights({**zero, **pw}))
-        s1 = (r1.scores.where(F.col("score") > 0)
+        s1 = (inside(r1.scores.where(F.col("score") > 0))
               .orderBy(F.desc("score"), F.asc("doc_id"))
               .limit(int(self.config["primary_field_limit"])))
         s2 = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_n)
         merged = two_pass_search(s1, s2, k=fetch_n)
-        enriched = idx._docs.join(F.broadcast(merged), "doc_id")
+        enriched = docs.join(F.broadcast(merged), "doc_id")
         rows = [r.asDict(recursive=True) for r in enriched.collect()]
         _sort_rows(rows, [("score", False), ("doc_id", True)])
         return rows, len(rows), r1.handles

@@ -114,129 +114,6 @@ def encode_posting_block(doc_ids: np.ndarray, tfs: np.ndarray,
     return head + tail
 
 
-def encode_posting_group(doc_ids: np.ndarray, tfs: np.ndarray,
-                         doc_lens: np.ndarray,
-                         pos_offsets: np.ndarray, pos_values: np.ndarray,
-                         block_size: int, avgdl: float):
-    """Encode one (term, salt) posting group into block rows, fully
-    vectorized (no per-doc Python).
-
-    pos_offsets/pos_values are Arrow ListArray components for the group's
-    positions column: doc i's positions are
-    pos_values[pos_offsets[i]:pos_offsets[i+1]].
-
-    → list of (block_id, min_doc, max_doc, n_docs, block_max_norm, data).
-    """
-    n = doc_ids.size
-    order = np.argsort(doc_ids, kind="stable")
-    if not (order == np.arange(n)).all():
-        doc_ids = doc_ids[order]
-        tfs = tfs[order]
-        doc_lens = doc_lens[order]
-        # re-gather positions in sorted doc order
-        counts = np.diff(pos_offsets)
-        starts = pos_offsets[:-1]
-        idx = np.concatenate([np.arange(starts[i], starts[i] + counts[i])
-                              for i in order]) if n else np.empty(0, np.int64)
-        pos_values = pos_values[idx]
-        counts = counts[order]
-        pos_offsets = np.concatenate(([0], np.cumsum(counts)))
-
-    counts = np.diff(pos_offsets)  # per-doc n_pos (== tf)
-    # positions → per-doc deltas in one pass: global diff, then reset each
-    # doc's first slot back to its absolute value
-    if pos_values.size:
-        pv = pos_values.astype(np.int64)
-        deltas = np.empty_like(pv)
-        deltas[0] = pv[0]
-        np.subtract(pv[1:], pv[:-1], out=deltas[1:])
-        starts = pos_offsets[:-1][counts > 0]
-        deltas[starts] = pv[starts]
-    else:
-        deltas = pos_values.astype(np.int64)
-
-    # interleave [n_pos, deltas...] per doc into one stream
-    stream_len = n + int(pos_values.size)
-    stream = np.empty(stream_len, dtype=np.uint64)
-    count_slots = pos_offsets[:-1] + np.arange(n)  # where each n_pos goes
-    stream[count_slots] = counts.astype(np.uint64)
-    mask = np.ones(stream_len, dtype=bool)
-    mask[count_slots] = False
-    stream[mask] = deltas.astype(np.uint64)
-
-    rows = []
-    norms = bm25_norm(tfs, doc_lens, avgdl)
-    for b0 in range(0, n, block_size):
-        b1 = min(b0 + block_size, n)
-        ids = doc_ids[b0:b1]
-        id_deltas = np.empty(b1 - b0, dtype=np.uint64)
-        id_deltas[0] = ids[0]
-        if b1 - b0 > 1:
-            id_deltas[1:] = np.diff(ids.astype(np.uint64))
-        head = encode_varints(np.concatenate((
-            np.array([b1 - b0], dtype=np.uint64), id_deltas,
-            tfs[b0:b1].astype(np.uint64), doc_lens[b0:b1].astype(np.uint64))))
-        s0 = int(pos_offsets[b0]) + b0
-        s1 = int(pos_offsets[b1]) + b1
-        tail = encode_varints(stream[s0:s1])
-        rows.append((b0 // block_size, int(ids[0]), int(ids[-1]), b1 - b0,
-                     float(norms[b0:b1].max()), head + tail))
-    return rows
-
-
-def encode_posting_group_blobs(doc_ids: np.ndarray, tfs: np.ndarray,
-                               doc_lens: np.ndarray,
-                               blob_offsets: np.ndarray,
-                               blob_values: np.ndarray,
-                               block_size: int, avgdl: float):
-    """Like encode_posting_group, but positions arrive pre-encoded as the
-    per-doc varint records (BinaryArray components: blob i =
-    blob_values[blob_offsets[i]:blob_offsets[i+1]]). The positions tail of
-    each block is then a pure buffer slice — zero per-position work here.
-
-    doc_ids need not be pre-sorted: Spark bin-packs multiple files into
-    one read split, so a split's doc order can jump between file ranges —
-    blocks must still carry correct min/max metadata (WAND pruning relies
-    on it). Out-of-order input is sorted here with a vectorized ragged
-    gather of the blob records.
-
-    → list of (block_id, min_doc, max_doc, n_docs, block_max_norm, data).
-    """
-    n = doc_ids.size
-    if n > 1 and not (doc_ids[1:] >= doc_ids[:-1]).all():
-        order = np.argsort(doc_ids, kind="stable")
-        doc_ids = doc_ids[order]
-        tfs = tfs[order]
-        doc_lens = doc_lens[order]
-        counts = np.diff(blob_offsets)
-        starts = blob_offsets[:-1]
-        sel_starts = starts[order]
-        sel_counts = counts[order]
-        new_offsets = np.concatenate(([0], np.cumsum(sel_counts))).astype(np.int64)
-        total = int(new_offsets[-1])
-        idx = (np.repeat(sel_starts, sel_counts)
-               + (np.arange(total, dtype=np.int64)
-                  - np.repeat(new_offsets[:-1], sel_counts)))
-        blob_values = blob_values[idx]
-        blob_offsets = new_offsets
-    rows = []
-    norms = bm25_norm(tfs, doc_lens, avgdl)
-    for b0 in range(0, n, block_size):
-        b1 = min(b0 + block_size, n)
-        ids = doc_ids[b0:b1]
-        id_deltas = np.empty(b1 - b0, dtype=np.uint64)
-        id_deltas[0] = ids[0]
-        if b1 - b0 > 1:
-            id_deltas[1:] = np.diff(ids.astype(np.uint64))
-        head = encode_varints(np.concatenate((
-            np.array([b1 - b0], dtype=np.uint64), id_deltas,
-            tfs[b0:b1].astype(np.uint64), doc_lens[b0:b1].astype(np.uint64))))
-        tail = blob_values[int(blob_offsets[b0]):int(blob_offsets[b1])].tobytes()
-        rows.append((b0 // block_size, int(ids[0]), int(ids[-1]), b1 - b0,
-                     float(norms[b0:b1].max()), head + tail))
-    return rows
-
-
 def _ragged_gather_idx(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Indices [s0..s0+c0) ++ [s1..s1+c1) ++ … as one int64 array."""
     total = int(counts.sum())
@@ -279,10 +156,10 @@ def decode_posting_batch(boundaries: np.ndarray, buf: np.ndarray,
     pyarrow.ListArray.from_arrays — zero row-wise assembly).
 
     Exactness: block format pins n_pos == tf for every doc (every encoder
-    writes len(positions) as the tf — see encode_posting_group*/the runs
-    kernel), which lets the per-doc [n_pos, deltas…] records be located
-    by a cumsum over the already-decoded tfs instead of a sequential
-    walk. Every gathered slot is bounds-checked against its own block
+    writes len(positions) as the tf — see encode_posting_block and the
+    build kernel), which lets the per-doc [n_pos, deltas…] records be
+    located by a cumsum over the already-decoded tfs instead of a
+    sequential walk. Every gathered slot is bounds-checked against its own block
     first: a batch with a block whose records would run past its bytes
     (truncated or bit-flipped data), or whose n_pos != tf, goes to the
     per-block fallback, which decodes a well-formed foreign block exactly

@@ -429,16 +429,6 @@ def decode_plan(scan: DataFrame, with_positions: bool) -> DataFrame:
                         schema=_DECODED_SCHEMA))
 
 
-def _phrase_tf(positions_per_term: list[np.ndarray]) -> int:
-    """Number of start positions p with term_i at p+i for all i."""
-    starts = positions_per_term[0]
-    for i, pos in enumerate(positions_per_term[1:], start=1):
-        if starts.size == 0:
-            return 0
-        starts = starts[np.isin(starts + i, pos)]
-    return int(starts.size)
-
-
 def _near_trim(instances: list[np.ndarray], plens: list[int], distance: int,
                wvec: Optional[tuple] = None):
     """FTS5 NEAR: an assignment (one instance per phrase) is valid iff

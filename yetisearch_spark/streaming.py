@@ -772,8 +772,8 @@ def merge_segments(spark: SparkSession, index_dir: str,
     # merged segments live in their own epoch-number range: naming the
     # result max(epochs)+1 COLLIDED with the caller's next streaming
     # batch id — append_segment would resume into the existing merged
-    # dir and silently drop that batch (found by scripts/bench_merge.py;
-    # pinned in test_tiered_merge). Batch ids replaying the same epoch
+    # dir and silently drop that batch (found by a tiered-compaction
+    # benchmark run; pinned in test_tiered_merge). Batch ids replaying the same epoch
     # must keep resuming (exactly-once), so the fix is a disjoint range,
     # not collision remapping.
     new_ep = max(max(segs) + 1, MERGED_EPOCH_BASE)

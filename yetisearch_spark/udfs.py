@@ -7,16 +7,9 @@ annotations`` — PySpark's pandas-UDF type-hint inference needs real
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import ArrayType, StringType
 
 from .analyzer import analyze_batch
-
-POSTING_STRUCT = ArrayType(StructType([
-    StructField("term", StringType()),
-    StructField("tf", IntegerType()),
-    StructField("pos_blob", BinaryType()),
-]))
 
 
 def make_analyze_udf(language: str = "english"):
@@ -28,44 +21,3 @@ def make_analyze_udf(language: str = "english"):
                          index=texts.index)
 
     return analyze_udf
-
-
-def _venc(values, out: bytearray) -> None:
-    """Append LEB128 varints (tiny-int fast path — positions are small)."""
-    for v in values:
-        while v >= 0x80:
-            out.append((v & 0x7F) | 0x80)
-            v >>= 7
-        out.append(v)
-
-
-def make_postings_udf():
-    """tokens array → array<(term, tf, pos_blob)> per row.
-
-    pos_blob is the per-doc position record of the final posting format —
-    varint(n_pos) + varint position deltas — encoded HERE in the
-    embarrassingly-parallel pre-shuffle stage, so (a) the term-hash
-    shuffle moves compact binaries instead of int lists and (b) the
-    encode kernel's positions tail is a pure Arrow buffer slice."""
-
-    @pandas_udf(POSTING_STRUCT)
-    def postings_udf(token_lists: pd.Series) -> pd.Series:
-        out = []
-        for tokens in token_lists:
-            if tokens is None or len(tokens) == 0:
-                out.append([])
-                continue
-            agg = {}
-            for pos, t in enumerate(tokens):
-                agg.setdefault(t, []).append(pos)
-            row = []
-            for t, ps in agg.items():
-                blob = bytearray()
-                _venc((len(ps), ps[0]), blob)
-                if len(ps) > 1:
-                    _venc([b - a for a, b in zip(ps, ps[1:])], blob)
-                row.append((t, len(ps), bytes(blob)))
-            out.append(row)
-        return pd.Series(out, index=token_lists.index)
-
-    return postings_udf
