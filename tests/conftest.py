@@ -26,3 +26,12 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def facade_idx(spark, tmp_path_factory):
+    """The seed-77 index (3000 turns, 8 buckets, block_size 16) shared by
+    test_round5_facade and test_round6_totals: built once per session."""
+    from facade_helpers import _build
+
+    return _build(spark, tmp_path_factory, "facade_idx", 3000, 77)

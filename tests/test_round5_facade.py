@@ -1,44 +1,21 @@
-"""Round 5: the block-max pruned tier must be reachable from the user
-facade (SearchIndex.search / Engine.search) and stay result-identical —
-pages AND totals — with the exact path."""
+"""Facade routes: the block-max pruned tier behind SearchIndex.search and
+Engine.search, on the shared seed-77 index, must take the pruned path
+and serve the exact path's pages and totals."""
 
-import pytest
-
-from yetisearch_spark.build import build_index
-from yetisearch_spark.corpus import generate_transcripts
+from yetisearch_spark.engine import SearchQuery
 from yetisearch_spark.query import SearchIndex, parse_query
 
-
-@pytest.fixture(scope="module")
-def idx_dir(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("facade_idx"))
-    pdf = generate_transcripts(3000, seed=77)
-    build_index(spark, spark.createDataFrame(pdf), out,
-                num_buckets=8, block_size=16)
-    return out
+from facade_helpers import _engine, _exact_and_routed, _page, _rows, _top_terms
 
 
-def _common_terms(index, n=4):
-    rows = (index._term_stats.orderBy("df", ascending=False)
-            .limit(50).collect())
-    from yetisearch_spark.analyzer import analyze
-    terms = [r["term"] for r in rows if analyze(r["term"]) == [r["term"]]]
-    return terms[:n]
-
-
-def _page(index, q, k=10):
-    return [(r["doc_id"], round(r["score"], 9))
-            for r in index.search(q, k=k).collect()]
-
-
-def test_searchindex_facade_routes_and_matches_exact(spark, idx_dir):
-    exact = SearchIndex(spark, idx_dir, cache_postings=False,
+def test_searchindex_facade_routes_and_matches_exact(spark, facade_idx):
+    exact = SearchIndex(spark, facade_idx, cache_postings=False,
                         cache_docs=False)
     exact.pruned_gate_blocks = -1          # facade pruning disabled
-    routed = SearchIndex(spark, idx_dir, cache_postings=False,
+    routed = SearchIndex(spark, facade_idx, cache_postings=False,
                          cache_docs=False)
     routed.pruned_gate_blocks = 0          # facade pruning forced
-    t = _common_terms(exact)
+    t = _top_terms(exact, 4)
     queries = [f'"{t[0]}"',
                f'"{t[0]}" AND "{t[1]}"',
                f'"{t[0]}" OR "{t[2]}" OR "{t[3]}"']
@@ -51,42 +28,34 @@ def test_searchindex_facade_routes_and_matches_exact(spark, idx_dir):
     routed.close()
 
 
-def _rows(df):
-    return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
-
-
-def test_searchindex_facade_with_docs(spark, idx_dir):
-    routed = SearchIndex(spark, idx_dir, cache_postings=False,
+def test_searchindex_facade_with_docs(spark, facade_idx):
+    routed = SearchIndex(spark, facade_idx, cache_postings=False,
                          cache_docs=False)
     routed.pruned_gate_blocks = 0
-    t = _common_terms(routed)
+    t = _top_terms(routed, 4)
     out = routed.search(f'"{t[0]}"', k=5, with_docs=True).collect()
     assert len(out) == 5
     assert "text" in out[0].asDict()
     routed.close()
 
 
-def test_searchindex_facade_default_gate_small_corpus(spark, idx_dir):
+def test_searchindex_facade_default_gate_small_corpus(spark, facade_idx):
     """Default gate: a 3k-doc corpus is far below GATE_MIN_BLOCKS — the
     facade serves the exact path (no behavior change at small scale)."""
-    ix = SearchIndex(spark, idx_dir, cache_postings=False, cache_docs=False)
-    t = _common_terms(ix)
+    ix = SearchIndex(spark, facade_idx, cache_postings=False, cache_docs=False)
+    t = _top_terms(ix, 4)
     df = ix.search(f'"{t[0]}"', k=10)
     assert ix.route(parse_query(f'"{t[0]}"'), 10).kind == "exact"
     assert len(df.collect()) == 10
     ix.close()
 
 
-def test_engine_facade_pruned_matches_exact(spark, idx_dir):
+def test_engine_facade_pruned_matches_exact(spark, facade_idx):
     """Engine.search through the pruned tier: page rows AND exact totals
     for single-term and AND shapes; R5 normalization consumes the pruned
     page unchanged."""
-    from yetisearch_spark.engine import Engine
-    exact = Engine(spark, {"t": idx_dir},
-                   config={"pruned_gate_blocks": -1, "enable_fuzzy": False})
-    routed = Engine(spark, {"t": idx_dir},
-                    config={"pruned_gate_blocks": 0, "enable_fuzzy": False})
-    t = _common_terms(exact.index("t"))
+    exact, routed = _exact_and_routed(spark, facade_idx)
+    t = _top_terms(exact.index("t"), 4)
     for q in [t[0], f"{t[0]} {t[1]}"]:
         a = exact.search("t", q)
         b = routed.search("t", q)
@@ -98,13 +67,9 @@ def test_engine_facade_pruned_matches_exact(spark, idx_dir):
         assert b["total"] > 0 and b["results"], q
 
 
-def test_engine_facade_pruned_min_score_and_offset(spark, idx_dir):
-    from yetisearch_spark.engine import Engine, SearchQuery
-    exact = Engine(spark, {"t": idx_dir},
-                   config={"pruned_gate_blocks": -1, "enable_fuzzy": False})
-    routed = Engine(spark, {"t": idx_dir},
-                    config={"pruned_gate_blocks": 0, "enable_fuzzy": False})
-    t = _common_terms(exact.index("t"))
+def test_engine_facade_pruned_min_score_and_offset(spark, facade_idx):
+    exact, routed = _exact_and_routed(spark, facade_idx)
+    t = _top_terms(exact.index("t"), 4)
     q = SearchQuery(query=f"{t[0]} {t[1]}", limit=5, offset=3, min_score=10.0)
     a = exact.search("t", q)
     b = routed.search("t", q)
@@ -112,18 +77,15 @@ def test_engine_facade_pruned_min_score_and_offset(spark, idx_dir):
     assert b["total"] == a["total"]
 
 
-def test_engine_pruned_single_runs_one_action(spark, idx_dir):
+def test_engine_pruned_single_runs_one_action(spark, facade_idx):
     """The pruned single-term engine route must stay ONE Spark action
     per query: the page+total union collect, with the total a driver
     literal (df) — no count job, no extra phase-1 job once the per-term
     block metadata is memoized."""
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
-    from yetisearch_spark.engine import Engine, SearchQuery
-
-    eng = Engine(spark, {"t": idx_dir},
-                 config={"pruned_gate_blocks": 0, "enable_fuzzy": False})
-    t = _common_terms(eng.index("t"))[0]
+    eng = _engine(spark, facade_idx, 0)
+    t = _top_terms(eng.index("t"), 4)[0]
     q = SearchQuery(query=t, limit=10, bypass_cache=True)
     eng.search("t", q)          # warm-up: meta collect + plan build
 

@@ -1,39 +1,52 @@
-"""Round 7 (verdict order 3): keyset-cursor pages served through the
-pruned tier (suffix deepening) must equal the exact path's pages — walk
-the whole result set page by page with the gate FORCED and compare
-against offset slices from an exact twin, including the final short
-page and ties."""
+"""Keyset-cursor pages served through the pruned cursor tier must equal
+the exact twin's pages, walking the whole result set including the final
+short page and ties."""
 
 import pytest
 
 from yetisearch_spark.build import build_index
-from yetisearch_spark.corpus import generate_transcripts
-from yetisearch_spark.query import SearchIndex
+from yetisearch_spark.query import parse_query
+
+from facade_helpers import _cursor_twins, _top_terms
+from test_decode_route import _skew_frame
 
 
 @pytest.fixture(scope="module")
 def cidx(spark, tmp_path_factory):
+    """The skew corpus (``zzhead`` in every turn) at block_size 4: small
+    blocks let θ bite within one cursor round, so zzhead's next pages
+    are served by the cursor tier rather than falling back to exact."""
     out = str(tmp_path_factory.mktemp("c7_idx"))
-    pdf = generate_transcripts(2000, seed=66)
-    build_index(spark, spark.createDataFrame(pdf), out,
-                num_buckets=8, block_size=16)
+    build_index(spark, _skew_frame(spark, 600, 29), out, num_buckets=8,
+                block_size=4)
     return out
 
 
-def _terms(index, n=2):
-    rows = (index._term_stats.orderBy("df", ascending=False)
-            .limit(30).collect())
-    from yetisearch_spark.analyzer import analyze
-    ts = [r["term"] for r in rows if analyze(r["term"]) == [r["term"]]]
-    return ts[:n]
+def test_cursor_tier_serves_skew_head_pages(spark, cidx):
+    """zzhead's pages 2 and 3 are served by the cursor tier (suffix
+    deepening), and each equals the exact twin's page."""
+    pruned_idx, exact_idx = _cursor_twins(spark, cidx)
+    node = parse_query("zzhead")
+    p1 = exact_idx.search("zzhead", k=10).collect()
+    after = (p1[-1]["score"], p1[-1]["doc_id"])
+    for page in (2, 3):
+        assert pruned_idx.route(node, 10, after=after).kind == "cursor", page
+        got = [(r["doc_id"], r["score"]) for r in
+               pruned_idx.search("zzhead", k=10, after=after).collect()]
+        want = [(r["doc_id"], r["score"]) for r in
+                exact_idx.search("zzhead", k=10, after=after).collect()]
+        assert len(got) == 10 and got == want, page
+        after = (got[-1][1], got[-1][0])
+    pruned_idx.close()
+    exact_idx.close()
 
 
 def test_cursor_pruned_pages_equal_exact(spark, cidx):
-    pruned_idx = SearchIndex(spark, cidx)
-    pruned_idx.pruned_gate_blocks = 0        # force the pruned route
-    exact_idx = SearchIndex(spark, cidx)
-    exact_idx.pruned_gate_blocks = -1
-    t = _terms(pruned_idx)
+    """Cursor pages with the gate FORCED walk the whole result set and
+    equal offset slices from an exact twin, including the final short
+    page and ties."""
+    pruned_idx, exact_idx = _cursor_twins(spark, cidx)
+    t = _top_terms(pruned_idx, 2)
     for q in [t[0], f'"{t[0]}" OR "{t[1]}"']:
         full = [(r["doc_id"], r["score"]) for r in
                 exact_idx.search(q, k=10_000).collect()]
@@ -50,11 +63,8 @@ def test_cursor_pruned_pages_equal_exact(spark, cidx):
 
 
 def test_cursor_pruned_with_docs(spark, cidx):
-    pruned_idx = SearchIndex(spark, cidx)
-    pruned_idx.pruned_gate_blocks = 0
-    exact_idx = SearchIndex(spark, cidx)
-    exact_idx.pruned_gate_blocks = -1
-    t = _terms(pruned_idx)[0]
+    pruned_idx, exact_idx = _cursor_twins(spark, cidx)
+    t = _top_terms(pruned_idx, 2)[0]
     p1 = exact_idx.search(t, k=5).collect()
     after = (p1[-1]["score"], p1[-1]["doc_id"])
     a = [(r["doc_id"], r["score"], r["conv_id"]) for r in

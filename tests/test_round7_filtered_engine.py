@@ -1,38 +1,25 @@
-"""Round 7 (verdict order 1): Engine.search with a filter on single/OR
-queries routes through the deepening page + position-free exact filtered
-total — results (page ids, 0-100 scores, total) must be identical to the
-exact engine, including when the filter defeats the deepening."""
+"""Engine.search with a filter: single/OR queries route through the
+deepening page + position-free exact filtered total, facet queries keep
+the exact path; results equal the exact engine's either way."""
 
 import pytest
 
-from yetisearch_spark.build import build_index
-from yetisearch_spark.corpus import generate_transcripts
-from yetisearch_spark.engine import Engine, SearchQuery
+from yetisearch_spark.engine import SearchQuery
+
+from facade_helpers import _build, _exact_and_routed, _top_terms
 
 
 @pytest.fixture(scope="module")
 def fidx(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("f7_idx"))
-    pdf = generate_transcripts(2500, seed=55)
-    build_index(spark, spark.createDataFrame(pdf), out,
-                num_buckets=8, block_size=16)
-    return out
-
-
-def _terms(index, n=2):
-    rows = (index._term_stats.orderBy("df", ascending=False)
-            .limit(30).collect())
-    from yetisearch_spark.analyzer import analyze
-    ts = [r["term"] for r in rows if analyze(r["term"]) == [r["term"]]]
-    return ts[:n]
+    return _build(spark, tmp_path_factory, "f7_idx", 2500, 55)
 
 
 def test_engine_filtered_single_or_parity(spark, fidx):
-    exact = Engine(spark, {"t": fidx},
-                   config={"pruned_gate_blocks": -1, "enable_fuzzy": False})
-    routed = Engine(spark, {"t": fidx},
-                    config={"pruned_gate_blocks": 0, "enable_fuzzy": False})
-    t = _terms(routed.index("t"))
+    """A filter on single/OR queries routes through the deepening page +
+    position-free exact filtered total — identical to the exact engine,
+    including when the filter defeats the deepening."""
+    exact, routed = _exact_and_routed(spark, fidx)
+    t = _top_terms(routed.index("t"), 2)
     filters = [
         [{"field": "role", "operator": "=", "value": "user"}],
         # a filter sparse enough to defeat the deepening (exact fallback)
@@ -52,11 +39,8 @@ def test_engine_filtered_single_or_parity(spark, fidx):
 def test_engine_filtered_keeps_exact_path_for_facets(spark, fidx):
     """Facet queries need the complete filtered set — the deepening must
     not hijack them; results stay identical either way."""
-    exact = Engine(spark, {"t": fidx},
-                   config={"pruned_gate_blocks": -1, "enable_fuzzy": False})
-    routed = Engine(spark, {"t": fidx},
-                    config={"pruned_gate_blocks": 0, "enable_fuzzy": False})
-    t = _terms(routed.index("t"))
+    exact, routed = _exact_and_routed(spark, fidx)
+    t = _top_terms(routed.index("t"), 2)
     sq = SearchQuery(query=t[0], limit=5, bypass_cache=True,
                      filters=[{"field": "role", "operator": "=",
                                "value": "user"}],
