@@ -9,7 +9,7 @@ from yetisearch_spark.postings import (decode_posting_block, decode_varints,
 from yetisearch_spark.chunking import chunk_text
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=None, derandomize=True)
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=200))
 def test_varint_roundtrip(values):
     arr = np.array(values, dtype=np.uint64)
@@ -17,7 +17,7 @@ def test_varint_roundtrip(values):
     assert out.tolist() == values
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=None, derandomize=True)
 @given(st.data())
 def test_posting_block_roundtrip(data):
     n = data.draw(st.integers(min_value=1, max_value=60))
@@ -46,7 +46,7 @@ def test_posting_block_roundtrip(data):
         assert list(a) == list(b)
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=None, derandomize=True)
 @given(st.lists(st.text(alphabet="abcdefg ", min_size=1, max_size=40),
                 min_size=1, max_size=60),
        st.integers(min_value=20, max_value=300),

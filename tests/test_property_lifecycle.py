@@ -36,7 +36,7 @@ def base_index(spark, tmp_path_factory):
     return out, base, pool
 
 
-@settings(max_examples=6, deadline=None,
+@settings(max_examples=6, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 @given(data=st.data())

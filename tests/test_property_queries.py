@@ -139,7 +139,7 @@ def test_dead_not_first_posting_leak(index, oracle):
                                 abs_tol=1e-12), (q, gd, gs, osc)
 
 
-@settings(max_examples=30, deadline=None,
+@settings(max_examples=30, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
 def test_random_trees_rank_identical(data, index, oracle, vocab_terms):
@@ -191,7 +191,7 @@ def mf_routed(spark, mf_index):
     ix.close()
 
 
-@settings(max_examples=15, deadline=None,
+@settings(max_examples=15, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
 def test_random_trees_weighted_multifield(data, mf_index, mf_oracle,
@@ -240,7 +240,7 @@ def seg_pair(spark, corpus, tmp_path_factory):
     live.close()
 
 
-@settings(max_examples=12, deadline=None,
+@settings(max_examples=12, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
 def test_random_trees_segmented_serving(data, seg_pair, index, oracle,
@@ -275,7 +275,7 @@ def engine_pair(spark, index):
     return exact, routed
 
 
-@settings(max_examples=50, deadline=None,
+@settings(max_examples=50, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
 def test_random_trees_engine_facade(data, engine_pair, vocab_terms):

@@ -1,6 +1,6 @@
 """Keyset-cursor pages served through the pruned cursor tier must equal
-the exact twin's pages, walking the whole result set including the final
-short page and ties."""
+the exact twin's pages: across the cursor tier's deepening limits and
+over the final short page, ties included."""
 
 import pytest
 
@@ -42,24 +42,33 @@ def test_cursor_tier_serves_skew_head_pages(spark, cidx):
 
 
 def test_cursor_pruned_pages_equal_exact(spark, cidx):
-    """Cursor pages with the gate FORCED walk the whole result set and
-    equal offset slices from an exact twin, including the final short
-    page and ties."""
+    """Cursor pages with the gate FORCED equal their slices of the exact
+    twin's full ranking: the first pages, the pages straddling rows 64
+    and 256 (where the cursor tier's rounds k' = max(4k, 64) and
+    max(16k, 256) run out) and the final pages, ending on a short page
+    and then an empty one. Each walk's cursor is seeded from the row of
+    the full ranking before it, so ties at a page edge stay covered."""
     pruned_idx, exact_idx = _cursor_twins(spark, cidx)
     t = _top_terms(pruned_idx, 2)
+    k = 7
     for q in [t[0], f'"{t[0]}" OR "{t[1]}"']:
         full = [(r["doc_id"], r["score"]) for r in
                 exact_idx.search(q, k=10_000).collect()]
-        k = 7
-        got = []
-        after = None
-        for _ in range(len(full) // k + 2):
-            rows = pruned_idx.search(q, k=k, after=after).collect()
-            if not rows:
-                break
-            got.extend((r["doc_id"], r["score"]) for r in rows)
-            after = (rows[-1]["score"], rows[-1]["doc_id"])
-        assert got == full, q
+        assert len(full) > 256 + 3 * k, len(full)
+        for start in (0, 64 - k - 3, 256 - k - 3, len(full) - 2 * k - 3):
+            after = (None if start == 0
+                     else (full[start - 1][1], full[start - 1][0]))
+            got = []
+            for _ in range(4):
+                rows = pruned_idx.search(q, k=k, after=after).collect()
+                want = full[start + len(got):start + len(got) + k]
+                assert [(r["doc_id"], r["score"]) for r in rows] == want, \
+                    (q, start + len(got))
+                if not rows:
+                    break
+                got.extend((r["doc_id"], r["score"]) for r in rows)
+                after = (rows[-1]["score"], rows[-1]["doc_id"])
+        assert got == full[-2 * k - 3:], q   # the last walk reached the end
 
 
 def test_cursor_pruned_with_docs(spark, cidx):

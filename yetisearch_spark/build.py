@@ -490,7 +490,11 @@ def build_index(
         # round 7: per-bucket lineage counters ride the postings WRITE
         # as observed conditional sums — the old read-back job re-read
         # the whole postings table (including the data bytes) just to
-        # aggregate 32 rows
+        # aggregate 32 rows. They are BEST-EFFORT: observe runs in the
+        # shuffle-map stage below the repartition, so a stage retry (a
+        # fetch failure) or a speculative task can count a partition
+        # twice. Nothing derives data from them; only the benchmark's
+        # postings.bytes_per_posting metric reads them.
         from pyspark.sql import Observation
         obs_pb = Observation()
         pb_aggs = []

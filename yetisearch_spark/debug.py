@@ -84,7 +84,7 @@ def debug_query(spark: SparkSession, index_dir: str, query: str,
                 k: int = 10) -> dict:
     """Compiled AST + executed-plan dump for a query (the Spark analog of
     the reference's SQL + params + EXPLAIN QUERY PLAN). Returns
-    {query, ast, route, decode, plan}. ``route`` is the planner's choice
+    {query, ast, route, decode, match, plan}. ``route`` is the planner's choice
     for the query as SearchIndex.search serves it (SearchIndex.route):
     {kind, reason, stats} — kind "pruned" or "exact", the gate reason
     of an exact route, and the pruned tier's block counters (or the
@@ -97,7 +97,12 @@ def debug_query(spark: SparkSession, index_dir: str, query: str,
     SearchIndex.DRIVER_DECODE_MAX_BYTES); both are None for a vocabulary
     too big to load, which always decodes on the executor. Terms never
     decoded one by one (prefix expansions, out-of-vocabulary terms, the
-    pruned tier's block scans) have no entry."""
+    pruned tier's block scans) have no entry. ``match`` lists each
+    multi-term phrase and NEAR match table the exact path built: {node,
+    route, rows}, route "driver" when every term it reads was decoded on
+    the driver (the table was computed there, and ``rows`` is its row
+    count, the phrase's df) or "spark" (built in the plan; ``rows`` is
+    None)."""
     from .query import SearchIndex, decode_scope, parse_query
 
     idx = SearchIndex(spark, index_dir, cache_postings=False,
@@ -109,6 +114,7 @@ def debug_query(spark: SparkSession, index_dir: str, query: str,
         df = idx._top(r, k)
     out["route"] = {"kind": r.kind, "reason": r.reason, "stats": r.stats}
     out["decode"] = list(scope.routes.values())
+    out["match"] = list(scope.matches.values())
     import io
     from contextlib import redirect_stdout
     buf = io.StringIO()

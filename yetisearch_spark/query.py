@@ -37,7 +37,9 @@ Serving-path shape (round 2 — one shuffle, one planning job, hot cache):
     per-slot presence (sᵢ IS NOT NULL) — no per-child join chain, no
     object aggregation anywhere in scoring.
   * every multi-token phrase/prefix df is counted in ONE batched job
-    (union of tagged match tables → groupBy(tag).count()).
+    (union of tagged match tables → groupBy(tag).count()), except a
+    phrase whose terms all decode on the driver: its match table is
+    built there, and its df is its row count, so it needs no df job.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from __future__ import annotations
 import contextvars
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
-from typing import Optional, Sequence
+from typing import NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -361,18 +363,86 @@ def _decode_blocks(datas, with_positions: bool, terms):
         raise ValueError(f"term {term!r}: {e}") from e
 
 
-def _posting_columns(out, with_positions: bool) -> list:
-    """decode_posting_batch output → Arrow arrays doc_id, tf, doc_len
-    (+ positions when decoded), assembled zero-copy from the flat numpy
-    results (pa.ListArray.from_arrays, no per-doc Python objects)."""
+class _Rows(NamedTuple):
+    """Posting or match rows as flat numpy columns: doc_id, tf, doc_len
+    and, when decoded, row i's positions at
+    positions[offsets[i]:offsets[i + 1]]."""
+    doc_id: np.ndarray
+    tf: np.ndarray
+    doc_len: np.ndarray
+    offsets: Optional[np.ndarray] = None
+    positions: Optional[np.ndarray] = None
+
+
+def _rows_of(out, with_positions: bool) -> _Rows:
+    """decode_posting_batch output → _Rows (no copy)."""
+    return _Rows(*out[1:4], *(out[4:6] if with_positions else ()))
+
+
+def _take_rows(r: _Rows, idx: np.ndarray) -> _Rows:
+    """Rows ``idx`` of ``r``, in that order, positions gathered along."""
+    if r.offsets is None:
+        return _Rows(r.doc_id[idx], r.tf[idx], r.doc_len[idx])
+    lens = r.offsets[idx + 1] - r.offsets[idx]
+    offs = np.zeros(idx.size + 1, np.int64)
+    np.cumsum(lens, out=offs[1:])
+    gather = (np.repeat(r.offsets[idx] - offs[:-1], lens)
+              + np.arange(offs[-1], dtype=np.int64))
+    return _Rows(r.doc_id[idx], r.tf[idx], r.doc_len[idx], offs,
+                 r.positions[gather])
+
+
+def _posting_columns(r: _Rows) -> list:
+    """_Rows → Arrow arrays doc_id, tf, doc_len (+ positions when
+    decoded), assembled zero-copy from the flat numpy columns
+    (pa.ListArray.from_arrays, no per-doc Python objects)."""
     import pyarrow as pa
 
-    cols = [pa.array(out[1]), pa.array(out[2].astype(np.int32)),
-            pa.array(out[3].astype(np.int32))]
-    if with_positions:
+    cols = [pa.array(r.doc_id.astype(np.int64)),
+            pa.array(r.tf.astype(np.int32)),
+            pa.array(r.doc_len.astype(np.int32))]
+    if r.offsets is not None:
         cols.append(pa.ListArray.from_arrays(
-            pa.array(out[4].astype(np.int32)), pa.array(out[5])))
+            pa.array(r.offsets.astype(np.int32)),
+            pa.array(r.positions.astype(np.int32))))
     return cols
+
+
+def _common_docs(rows: Sequence[_Rows]) -> tuple[np.ndarray, list]:
+    """Docs present in every one of the doc_id-sorted ``rows`` → (doc
+    ids, each input restricted to them, row for row)."""
+    docs = rows[0].doc_id
+    for r in rows[1:]:
+        docs = np.intersect1d(docs, r.doc_id, assume_unique=True)
+    return docs, [_take_rows(r, np.searchsorted(r.doc_id, docs))
+                  for r in rows]
+
+
+def _phrase_rows(term_rows: Sequence[_Rows]) -> _Rows:
+    """The driver twin of SearchIndex._phrase_match: phrase matches from
+    the doc_id-sorted positional rows of each phrase term, in phrase
+    order → (doc_id, tf = instances, doc_len, positions = instance
+    starts). Per doc S₀ = P₀ and Sᵢ = Sᵢ₋₁ ∩ (Pᵢ − i), the
+    array_intersect chain, computed as one sorted intersection of
+    (doc, position) keys per term."""
+    m = len(term_rows)
+    docs, sub = _common_docs(term_rows)
+    top = max((int(r.positions.max()) for r in sub if r.positions.size),
+              default=0)
+    big = top + m + 1    # every shifted position lies in [1, big)
+    starts = None
+    for i, r in enumerate(sub):
+        doc = np.repeat(np.arange(docs.size, dtype=np.int64),
+                        np.diff(r.offsets))
+        key = doc * big + (r.positions.astype(np.int64) + (m - i))
+        starts = key if starts is None else np.intersect1d(
+            starts, key, assume_unique=True)
+    tf = np.bincount(starts // big, minlength=docs.size)
+    keep = tf > 0
+    offs = np.zeros(int(keep.sum()) + 1, np.int64)
+    np.cumsum(tf[keep], out=offs[1:])
+    return _Rows(docs[keep], tf[keep], sub[0].doc_len[keep], offs,
+                 starts % big - m)
 
 
 def _decode_arrow_factory(with_positions: bool):
@@ -402,7 +472,7 @@ def _decode_arrow_factory(with_positions: bool):
             rows, n = out[0], out[1].size
             if n == 0:
                 continue
-            cols = _posting_columns(out, with_positions)
+            cols = _posting_columns(_rows_of(out, with_positions))
             if not with_positions:
                 cols.append(pa.nulls(n, pa.list_(pa.int32())))
             idx = np.repeat(np.arange(len(rows), dtype=np.int64), rows)
@@ -476,15 +546,81 @@ def _near_trim(instances: list[np.ndarray], plens: list[int], distance: int,
     return True, counts
 
 
+def _near_kernel(doc_id: np.ndarray, doc_len: np.ndarray, members: list,
+                 plens: list[int], distance: int,
+                 warr: Optional[np.ndarray] = None) -> Optional[dict]:
+    """Batch-vectorized _near_trim over n candidate docs, shared by the
+    mapInPandas NEAR kernel and the driver NEAR tables. ``members``: per
+    NEAR phrase, (per-doc instance counts, the docs' instance starts
+    flattened in doc order). → the columns doc_id, doc_len, tf_0 …
+    tf_{k-1} of the matching docs, or None when none matches.
+
+    Every doc's instance lists are flattened into ONE sorted int64 array
+    per phrase, keyed by doc_row * big + position (big > max_pos +
+    distance + max(plens) + 1, so window probes can never cross a doc
+    boundary) — all searchsorted/window logic then runs once per batch
+    instead of once per doc (no per-row Python loop; float-identical to
+    _near_trim, which the plan tests keep as the reference oracle)."""
+    from .build import FIELD_SHIFT
+
+    n, k = doc_id.size, len(members)
+    if n == 0:
+        return None
+    rows_idx = np.arange(n, dtype=np.int64)
+    flats = [flat for _, flat in members]
+    docs_of = [np.repeat(rows_idx, lens) for lens, _ in members]
+    max_pos = max((int(f.max()) for f in flats if f.size), default=0)
+    big = max_pos + distance + max(plens) + 2
+    offs = [flats[i] + docs_of[i] * big for i in range(k)]
+    ends = [offs[j] + (plens[j] - 1) for j in range(k)]
+    ms = np.unique(np.concatenate(ends))
+    ok = np.empty((k, ms.size), dtype=bool)
+    for j in range(k):
+        lo = np.searchsorted(offs[j], ms - (plens[j] - 1), side="left")
+        hi = np.searchsorted(offs[j], ms + distance + 1, side="right")
+        ok[j] = hi > lo
+    matched = np.zeros(n, dtype=bool)
+    matched[ms[ok.all(axis=0)] // big] = True
+    if not matched.any():
+        return None
+    out = {"doc_id": doc_id[matched], "doc_len": doc_len[matched]}
+    for i in range(k):
+        others = np.ones(ms.size, dtype=bool)
+        for j in range(k):
+            if j != i:
+                others &= ok[j]
+        valid_ms = ms[others]
+        xs = offs[i]
+        lo = np.searchsorted(valid_ms, xs - distance - 1, side="left")
+        hi = np.searchsorted(valid_ms, xs + (plens[i] - 1), side="right")
+        keep = hi > lo
+        kept_docs = docs_of[i][keep]
+        if warr is None:
+            cnt = np.bincount(kept_docs, minlength=n)
+            out[f"tf_{i}"] = cnt[matched].astype(np.int32)
+        else:
+            fld = np.clip(flats[i][keep] >> FIELD_SHIFT, 0, len(warr) - 1)
+            cnt = np.bincount(kept_docs, weights=warr[fld], minlength=n)
+            out[f"tf_{i}"] = cnt[matched]
+    return out
+
+
 @dataclass
 class DecodeScope:
     """Decode state of ONE search()/count()/match_scores() call.
 
-    ``frames``: driver-decoded term frames by (index, term, positions),
-    so each variant is built at most once per call. ``routes``: every
-    decode route taken, by (term, positions) — debug_query reports them."""
+    ``arrays``: driver-decoded terms as doc_id-sorted _Rows by (index,
+    term, positions), each decoded at most once per call (a light
+    request reuses positional rows). ``frames``: local relations built
+    from them by (index, term, positions), only for terms a Spark plan
+    reads. ``routes``: every decode route taken, by (term, positions);
+    ``matches``: the route of every phrase/NEAR match table built, by
+    node, as {node, route ("driver" or "spark"), rows (the driver row
+    count, None on Spark)} — debug_query reports both."""
+    arrays: dict = field(default_factory=dict)
     frames: dict = field(default_factory=dict)
     routes: dict = field(default_factory=dict)
+    matches: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -975,21 +1111,27 @@ class SearchIndex:
                     url2pathname(urlparse(uri).path))
         return files
 
-    def _driver_decode(self, term: str, with_positions: bool) -> DataFrame:
-        """One term decoded on the driver: its blocks are read with
+    def _driver_rows(self, term: str, with_positions: bool) -> _Rows:
+        """One term decoded on the driver → its _Rows, sorted by doc_id
+        (blocks are stored by (term, salt, min_doc), so doc_ids ascend
+        within a block but not across blocks). Its blocks are read with
         pyarrow from the files of its bucket in the _postings relation's
-        listing (term predicate pushed to the row groups), decoded by
-        decode_plan's kernel, and handed to Spark as a local relation of
-        (doc_id, tf, doc_len[, positions]) with the term added as a
-        literal column. A listed file that is gone (a merge or compaction
-        removed it under this view) raises FileNotFoundError, as the
-        executor route's scan fails."""
+        listing (term predicate pushed to the row groups) and decoded by
+        decode_plan's kernel, once per call's DecodeScope. A listed file
+        that is gone (a merge or compaction removed it under this view)
+        raises FileNotFoundError, as the executor route's scan fails."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         from .xxhash64 import bucket_of
 
+        scope = _SCOPE.get()
+        arrays = scope.arrays if scope is not None else {}
+        for wp in (with_positions, True):
+            hit = arrays.get((self, term, wp))
+            if hit is not None:
+                return hit
         files = self._postings_files.get(
             bucket_of(term, self.num_buckets), [])
         gone = [f for f in files if not os.path.exists(f)]
@@ -1001,12 +1143,27 @@ class SearchIndex:
                 .to_table(columns=["data"], filter=pc.field("term") == term)
                 .column("data").combine_chunks()
                 if files else pa.array([], pa.binary()))
-        out = _decode_blocks(data, with_positions, term)
+        rows = _rows_of(_decode_blocks(data, with_positions, term),
+                        with_positions)
+        if (np.diff(rows.doc_id) < 0).any():
+            rows = _take_rows(rows, np.argsort(rows.doc_id, kind="stable"))
+        arrays[(self, term, with_positions)] = rows
+        return rows
+
+    def _driver_decode(self, term: str, with_positions: bool) -> DataFrame:
+        """One driver-decoded term (_driver_rows) handed to Spark as a
+        local relation of (doc_id, tf, doc_len[, positions]) with the
+        term added as a literal column."""
+        import pyarrow as pa
+
+        rows = self._driver_rows(term, with_positions)
+        if not with_positions:
+            rows = _Rows(rows.doc_id, rows.tf, rows.doc_len)
         schema = _MATCH_SCHEMA if with_positions \
             else StructType(_MATCH_SCHEMA.fields[:3])
         local = self.spark.createDataFrame(
-            pa.table(_posting_columns(out, with_positions),
-                     names=schema.fieldNames()), schema=schema)
+            pa.table(_posting_columns(rows), names=schema.fieldNames()),
+            schema=schema)
         positions = (F.col("positions") if with_positions
                      else F.lit(None).cast("array<int>").alias("positions"))
         return local.select(F.lit(term).alias("term"), "doc_id", "tf",
@@ -1031,6 +1188,43 @@ class SearchIndex:
         # union would schedule dozens of no-op tasks per query
         return self.spark.createDataFrame(
             self.spark.sparkContext.emptyRDD(), _MATCH_SCHEMA)
+
+    @staticmethod
+    def _near_schema(k: int, wvec: Optional[tuple]) -> StructType:
+        tf_type = DoubleType() if wvec is not None else IntegerType()
+        return StructType(
+            [StructField("doc_id", LongType(), False),
+             StructField("doc_len", IntegerType(), False)]
+            + [StructField(f"tf_{i}", tf_type, False) for i in range(k)])
+
+    def _local_match(self, rows: _Rows) -> DataFrame:
+        """Driver-built match rows → a local relation of _MATCH_SCHEMA
+        (an empty one has zero partitions, as _empty_match)."""
+        import pyarrow as pa
+
+        if rows.doc_id.size == 0:
+            return self._empty_match()
+        return self.spark.createDataFrame(
+            pa.table(_posting_columns(rows),
+                     names=_MATCH_SCHEMA.fieldNames()),
+            schema=_MATCH_SCHEMA)
+
+    def _local_near(self, cols: Optional[dict], k: int,
+                    wvec: Optional[tuple]) -> DataFrame:
+        """_near_kernel's columns (None: no match) → a local relation of
+        (doc_id, doc_len, tf_0 … tf_{k-1})."""
+        import pyarrow as pa
+
+        schema = self._near_schema(k, wvec)
+        if cols is None:
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), schema)
+        tf_type = pa.float64() if wvec is not None else pa.int32()
+        arrays = [pa.array(cols["doc_id"].astype(np.int64)),
+                  pa.array(cols["doc_len"].astype(np.int32))]
+        arrays += [pa.array(cols[f"tf_{i}"], tf_type) for i in range(k)]
+        return self.spark.createDataFrame(
+            pa.table(arrays, names=schema.fieldNames()), schema=schema)
 
     # -- persisted per-query handles ------------------------------------------
 
@@ -1268,84 +1462,27 @@ class SearchIndex:
             joined = d if joined is None else joined.join(d, "doc_id")
         plens = [len(p.terms) for p in node.phrases]
         distance = node.distance
-
-        tf_type = DoubleType() if wvec is not None else IntegerType()
-        fields = [StructField("doc_id", LongType(), False),
-                  StructField("doc_len", IntegerType(), False)]
-        fields += [StructField(f"tf_{i}", tf_type, False) for i in range(k)]
-        out_schema = StructType(fields)
-
-        from .build import FIELD_SHIFT
         warr = np.asarray(wvec, dtype=np.float64) if wvec is not None else None
 
         def check(batches):
-            # batch-vectorized _near_trim: every doc's instance lists are
-            # flattened into ONE sorted int64 array per phrase, keyed by
-            # doc_row * big + position (big > max_pos + distance +
-            # max(plens) + 1, so window probes can never cross a doc
-            # boundary) — all searchsorted/window logic then runs once per
-            # batch instead of once per doc (no per-row Python loop;
-            # float-identical to _near_trim, which the plan tests keep as
-            # the reference oracle).
             for pdf in batches:
                 n = len(pdf)
                 if n == 0:
                     continue
-                rows_idx = np.arange(n, dtype=np.int64)
-                flats, docs_of = [], []
-                max_pos = 0
+                members = []
                 for i in range(k):
                     col = pdf[f"starts_{i}"].to_numpy()
                     lens = np.fromiter((len(a) for a in col),
                                        dtype=np.int64, count=n)
-                    flat = (np.concatenate(col).astype(np.int64)
-                            if int(lens.sum()) else
-                            np.empty(0, dtype=np.int64))
-                    if flat.size:
-                        max_pos = max(max_pos, int(flat.max()))
-                    flats.append(flat)
-                    docs_of.append(np.repeat(rows_idx, lens))
-                big = max_pos + distance + max(plens) + 2
-                offs = [flats[i] + docs_of[i] * big for i in range(k)]
-                ends = [offs[j] + (plens[j] - 1) for j in range(k)]
-                ms = np.unique(np.concatenate(ends))
-                ok = np.empty((k, ms.size), dtype=bool)
-                for j in range(k):
-                    lo = np.searchsorted(offs[j], ms - (plens[j] - 1),
-                                         side="left")
-                    hi = np.searchsorted(offs[j], ms + distance + 1,
-                                         side="right")
-                    ok[j] = hi > lo
-                matched = np.zeros(n, dtype=bool)
-                matched[ms[ok.all(axis=0)] // big] = True
-                if not matched.any():
-                    continue
-                out = {"doc_id": pdf["doc_id"].to_numpy()[matched],
-                       "doc_len": pdf["doc_len"].to_numpy()[matched]}
-                for i in range(k):
-                    others = np.ones(ms.size, dtype=bool)
-                    for j in range(k):
-                        if j != i:
-                            others &= ok[j]
-                    valid_ms = ms[others]
-                    xs = offs[i]
-                    lo = np.searchsorted(valid_ms, xs - distance - 1,
-                                         side="left")
-                    hi = np.searchsorted(valid_ms, xs + (plens[i] - 1),
-                                         side="right")
-                    keep = hi > lo
-                    kept_docs = docs_of[i][keep]
-                    if warr is None:
-                        cnt = np.bincount(kept_docs, minlength=n)
-                        out[f"tf_{i}"] = cnt[matched].astype(np.int32)
-                    else:
-                        fld = np.clip(flats[i][keep] >> FIELD_SHIFT,
-                                      0, len(warr) - 1)
-                        cnt = np.bincount(kept_docs, weights=warr[fld],
-                                          minlength=n)
-                        out[f"tf_{i}"] = cnt[matched]
-                yield pd.DataFrame(out)
-        return joined.mapInPandas(check, schema=out_schema)
+                    members.append((lens, np.concatenate(col).astype(np.int64)
+                                    if int(lens.sum()) else
+                                    np.empty(0, dtype=np.int64)))
+                out = _near_kernel(pdf["doc_id"].to_numpy(),
+                                   pdf["doc_len"].to_numpy(), members,
+                                   plens, distance, warr)
+                if out is not None:
+                    yield pd.DataFrame(out)
+        return joined.mapInPandas(check, schema=self._near_schema(k, wvec))
 
     def _near_table_pairwise(self, node: Near, phrase_tables: dict,
                              wvec: Optional[tuple] = None) -> DataFrame:
@@ -1395,11 +1532,18 @@ class SearchIndex:
         slot independently (a phrase appearing standalone AND inside a NEAR
         contributes twice, the NEAR copy with trimmed tf).
 
-        Exactly ONE planning job runs, and only for queries containing
-        multi-token phrases or prefixes: all their dfs are counted in a
-        single union+groupBy (the per-phrase count() jobs of the first
-        design were a per-query scale-killer). ``handles`` are the
-        persisted match tables — callers release() them when done."""
+        At most ONE planning job runs, and only for queries containing
+        multi-token phrases or prefixes built in Spark: all their dfs are
+        counted in a single union+groupBy (the per-phrase count() jobs of
+        the first design were a per-query scale-killer). A phrase whose
+        terms all take the driver decode route (_decode_route, on a view
+        without deletes) needs no df job: its match rows are computed on
+        the driver (_phrase_rows) and its df is their count; a NEAR whose
+        member phrases all have driver rows is trimmed there too
+        (_near_kernel). Both enter the plan as local relations.
+        ``phrase_tables`` holds a table for every phrase a scoring slot
+        or a Spark-built NEAR reads. ``handles`` are the persisted match
+        tables — callers release() them when done."""
         slots: list = []
         _collect_slots(node, slots)
 
@@ -1409,6 +1553,12 @@ class SearchIndex:
         term_stats = self.term_stats_for(sorted(terms))
 
         handles: list[DataFrame] = []
+        scope = _SCOPE.get()
+
+        def record(n, route: str, rows: Optional[int]) -> None:
+            if scope is not None:
+                scope.matches[n] = {"node": repr(n), "route": route,
+                                    "rows": rows}
 
         def materialize(key: tuple, factory):
             """Persisted LRU for phrase/prefix/NEAR match tables (hot
@@ -1430,10 +1580,44 @@ class SearchIndex:
                 self._df_count_cache.pop(k, None)
             return mt
 
+        driver_ok: dict = {}
+        driver_rows: dict = {}
+
+        def on_driver(p) -> bool:
+            """Does every term of phrase ``p`` decode on the driver with
+            positions (zero jobs; a view with deletes keeps Spark)?"""
+            if p in driver_ok:
+                return driver_ok[p]
+            ok = (self._tomb is None
+                  and all(t in term_stats for t in p.terms))
+            if ok:
+                routes = {t: self._decode_route(t, True)
+                          for t in set(p.terms)}
+                ok = all(r["route"] == "driver" for r in routes.values())
+                if ok and scope is not None:
+                    for t, r in routes.items():
+                        scope.routes[(t, True)] = r
+            driver_ok[p] = ok
+            return ok
+
+        def rows_of(p) -> _Rows:
+            if p not in driver_rows:
+                arrs = [self._driver_rows(t, True) for t in p.terms]
+                driver_rows[p] = (arrs[0] if len(arrs) == 1
+                                  else _phrase_rows(arrs))
+            return driver_rows[p]
+
+        nears = _unique_nears(node)
+        driver_nears = {nr for nr in nears
+                        if all(on_driver(p) for p in nr.phrases)}
+        standalone = {s[1] for s in slots if s[0] == "phrase"}
+        # phrases a Spark-built NEAR reads (with positions)
+        near_members = {p for nr in nears if nr not in driver_nears
+                        for p in nr.phrases}
+
         phrase_tables: dict = {}
         phrase_df: dict = {}
         pending: list = []   # (node, cache_key) needing the batched count job
-        near_members = {p for nr in _unique_nears(node) for p in nr.phrases}
         phraselikes = _unique_phraselike(node)
         # round 7: with the decoded-postings cache OFF, a term consumed by
         # several subtrees (bare slot + phrase constituent + NEAR member —
@@ -1441,7 +1625,8 @@ class SearchIndex:
         # ONE action. Persist such terms' decoded frames for the query
         # (released with the other handles) and feed them to every
         # consumer; if ANY use needs positions the positional variant is
-        # shared (light users read a column subset of it).
+        # shared (light users read a column subset of it). Driver-route
+        # terms are decoded once per call anyway (DecodeScope).
         shared_frames: dict | None = None
         if not self._cache_postings:
             # plan references per term frame: one per standalone scoring
@@ -1459,29 +1644,33 @@ class SearchIndex:
                 use_count[t] = use_count.get(t, 0) + 1
                 pos_need[t] = (pos_need.get(t, False) or wvec is not None
                                or pn in near_members)
-            for nr in _unique_nears(node):
+            for nr in nears:
+                if nr in driver_nears:
+                    continue
                 for p in set(nr.phrases):
                     if len(p.terms) == 1:
                         t = p.terms[0]
                         use_count[t] = use_count.get(t, 0) + 1
                         pos_need[t] = True
             shared = [t for t, n in use_count.items()
-                      if n > 1 and t in term_stats]
+                      if n > 1 and t in term_stats
+                      and self._decode_route(t, pos_need[t])["route"]
+                      == "executor"]
             if shared:
                 shared_frames = {}
                 for t in shared:
-                    f, route = self._term_decode_plan(t, pos_need[t])
-                    if route == "executor":
-                        f = f.persist()
-                        handles.append(f)
-                        shared_frames[t] = f
-                    # a driver frame stays in the call's DecodeScope,
-                    # where every consumer's _term_match finds it
+                    f = self._term_decode_plan(t, pos_need[t])[0].persist()
+                    handles.append(f)
+                    shared_frames[t] = f
         for p in phraselikes:
+            needed = p in standalone or p in near_members
             if isinstance(p, PrefixNode):
                 key = ("pref", p.prefix)
                 phrase_tables[p] = materialize(key, lambda p=p: self._prefix_match(p))
             elif len(p.terms) == 1:
+                phrase_df[p] = term_stats.get(p.terms[0], (0, 0))[0]
+                if not needed:
+                    continue    # read only by a driver-built NEAR
                 in_vocab = p.terms[0] in term_stats
                 # single-term scoring reads only tf/doc_len — skip the
                 # position-varint decode unless this slot feeds a NEAR
@@ -1493,13 +1682,19 @@ class SearchIndex:
                 else:
                     phrase_tables[p] = self._term_match(
                         p.terms[0], in_vocab, with_positions=need_pos)
-                phrase_df[p] = term_stats.get(p.terms[0], (0, 0))[0]
                 continue
             elif any(t not in term_stats for t in p.terms):
                 # a constituent term is out-of-vocabulary → the phrase can
                 # never match; no table, no df job
                 phrase_tables[p] = self._empty_match()
                 phrase_df[p] = 0
+                continue
+            elif on_driver(p):
+                rows = rows_of(p)
+                phrase_df[p] = int(rows.doc_id.size)
+                if needed:
+                    phrase_tables[p] = self._local_match(rows)
+                record(p, "driver", phrase_df[p])
                 continue
             else:
                 # NB: the multi-term phrase kernel keeps its own
@@ -1510,6 +1705,7 @@ class SearchIndex:
                 key = ("ph", p.terms)
                 phrase_tables[p] = materialize(
                     key, lambda p=p: self._phrase_match(p))
+                record(p, "spark", None)
             if key in self._df_count_cache:
                 phrase_df[p] = self._df_count_cache[key]
             else:
@@ -1530,23 +1726,32 @@ class SearchIndex:
                     self._df_count_cache[key] = phrase_df[p]
 
         near_tables: dict = {}
-        for nr in _unique_nears(node):
+        for nr in nears:
+            k = len(nr.phrases)
             if any(phrase_df.get(p, 0) == 0 for p in nr.phrases):
                 # a member phrase can never match (OOV term / zero df) →
                 # the NEAR group can't either. Short-circuit to an empty
                 # frame instead of building (and persisting) the trim
                 # kernel — the dominant plan-construction cost of the
                 # combined fuzzy shape when a typo stays uncorrectable.
-                k = len(nr.phrases)
-                tft = "double" if wvec is not None else "int"
-                schema = ("doc_id long, doc_len int, "
-                          + ", ".join(f"tf_{i} {tft}" for i in range(k)))
-                near_tables[nr] = self.spark.createDataFrame(
-                    self.spark.sparkContext.emptyRDD(), schema)
+                near_tables[nr] = self._local_near(None, k, wvec)
+                continue
+            if nr in driver_nears:
+                docs, sub = _common_docs([rows_of(p) for p in nr.phrases])
+                cols = _near_kernel(
+                    docs, sub[0].doc_len,
+                    [(np.diff(r.offsets), r.positions.astype(np.int64))
+                     for r in sub],
+                    [len(p.terms) for p in nr.phrases], nr.distance,
+                    None if wvec is None else np.asarray(wvec, np.float64))
+                near_tables[nr] = self._local_near(cols, k, wvec)
+                record(nr, "driver",
+                       0 if cols is None else int(cols["doc_id"].size))
                 continue
             key = ("nr", tuple(p.terms for p in nr.phrases), nr.distance, wvec)
             near_tables[nr] = materialize(
                 key, lambda nr=nr: self._near_table(nr, phrase_tables, wvec))
+            record(nr, "spark", None)
 
         self._register_handles(handles)
         return slots, phrase_tables, phrase_df, near_tables, handles

@@ -429,7 +429,7 @@ def _override_rows(batches):
     import numpy as np
     import pyarrow as pa
 
-    from .query import _decode_blocks, _posting_columns
+    from .query import _decode_blocks, _posting_columns, _rows_of
 
     for batch in batches:
         if batch.num_rows == 0:
@@ -443,7 +443,7 @@ def _override_rows(batches):
                                  out[0]))
         yield pa.record_batch(
             [terms.take(idx), batch.column(col("min_doc")).take(idx)]
-            + _posting_columns(out, False),
+            + _posting_columns(_rows_of(out, False)),
             names=["term", "min_doc", "doc_id", "tf", "doc_len"])
 
 
