@@ -130,13 +130,11 @@ def test_wholestage_codegen_on_scoring(spark, index):
 
 
 def _warm_hot(index, q):
-    """Two touches: fill the raw decode (query #1 shape), then promote to
-    the co-partitioned cache (round-4 two-touch promotion) — the HOT
-    serving layout the zero-exchange assertions are about."""
+    """One touch fills every term's decode in its final cached layout —
+    the HOT serving layout the zero-exchange assertions are about."""
     from yetisearch_spark.query import parse_query
     node = parse_query(q)
-    index.match_scores(node).collect()      # touch 1: raw fill
-    index._match_scores_build(node, None)   # touch 2: promotion
+    index.match_scores(node).collect()
     return node
 
 

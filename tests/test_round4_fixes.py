@@ -227,42 +227,63 @@ def test_verify_index_flags_missing_parts(spark, tmp_path):
     assert status["error"] == "missing layout parts"
 
 
-def test_two_touch_decode_promotion(spark, two_indexes):
-    """Round-4 cold-path design: touch 1 serves a plain persisted decode
-    (no repartition exchange in query #1; plans NOT memoized), touch 2
-    swaps in the co-partitioned frame built from the raw rows and
-    memoizes, touch 3 reuses the memoized plan. Results identical at
-    every stage."""
+def test_one_touch_decode_fill(spark, two_indexes):
+    """A decode miss fills the term's final cached layout at once (one
+    partition below COPART_MIN_DF) and the plan built over it is
+    memoised on that first call: the second search hands back the same
+    frame object, and every page is equal."""
     from yetisearch_spark.query import SearchIndex
 
     idx = SearchIndex(spark, two_indexes["b"])
     q = "data AND process"
 
-    def page():
-        return [(r["doc_id"], round(r["score"], 9))
-                for r in idx.search(q, k=10).collect()]
+    def rows(df):
+        return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
 
-    r1 = page()
-    raw_keys = set(idx._decoded_raw)
-    assert any(k[1] in ("data", "process") for k in raw_keys), raw_keys
-    assert len(idx._plan_cache) == 0      # volatile plans never memoized
+    df1 = idx.search(q, k=10)
+    r1 = rows(df1)
+    for term in ("data", "process"):
+        frame = idx._decoded_cache[("t", term, False)]
+        assert frame.storageLevel.useMemory
+        assert frame.rdd.getNumPartitions() == 1
 
-    r2 = page()
-    assert r2 == r1
-    assert not any(k[1] in ("data", "process") for k in idx._decoded_raw)
-    assert any(k[1] in ("data", "process") for k in idx._decoded_cache)
-    assert len(idx._plan_cache) > 0       # promoted plans are keepers
-    assert len(idx._retired) > 0          # raw twins awaiting drain
+    df2 = idx.search(q, k=10)
+    assert df2 is df1                     # memoised from touch 1
+    assert rows(df2) == r1
+    assert rows(idx.search(q, k=10)) == r1
+    idx.close()
 
-    df3 = idx.search(q, k=10)
-    df4 = idx.search(q, k=10)
-    assert df3 is df4                     # memoized plan object reuse
-    r3 = [(r["doc_id"], round(r["score"], 9)) for r in df3.collect()]
-    assert r3 == r1
 
-    from yetisearch_spark.query import parse_query
-    idx.match_scores(parse_query("data"))
-    assert idx._retired == []             # drained at the next plan build
+def test_lru_eviction_drops_match_table_and_df(spark, two_indexes):
+    """One eviction path for the persisted match tables, whoever fills
+    them: with room for two, the exact path's _plan and wand's forced-
+    pruned phrase route fill four phrase tables in turn, and each
+    evicted table is unpersisted and takes its cached df with it."""
+    from pyspark import StorageLevel
+
+    from yetisearch_spark.query import SearchIndex, parse_query
+    from yetisearch_spark.wand import pruned_scored
+
+    idx = SearchIndex(spark, two_indexes["a"])
+    idx.DECODED_CACHE_MAX = 2
+    phrases = ['"href http"', '"say make"', '"jalapeño go"', '"get say"']
+    keys = [("ph", parse_query(p).terms) for p in phrases]
+
+    idx.match_scores(parse_query(phrases[0])).collect()     # via _plan
+    oldest = idx._match_cache[keys[0]]
+    assert idx._df_count_cache[keys[0]] > 0
+    for p in phrases[1:3]:                                  # via wand
+        scored, info = pruned_scored(idx, parse_query(p), 10, gate_blocks=0)
+        assert scored is not None, info
+    assert list(idx._match_cache) == keys[1:3]
+    assert keys[0] not in idx._df_count_cache
+    assert oldest.storageLevel == StorageLevel.NONE
+
+    second = idx._match_cache[keys[1]]
+    idx.match_scores(parse_query(phrases[3])).collect()     # via _plan
+    assert list(idx._match_cache) == keys[2:]
+    assert second.storageLevel == StorageLevel.NONE
+    assert idx._df_count_cache[keys[3]] > 0
     idx.close()
 
 

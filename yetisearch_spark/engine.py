@@ -652,12 +652,6 @@ class Engine:
         docs_in_set = docs_in_set and not filtered_served
         total_mode_used = (r.stats or {}).get("total_mode", "exact")
         scores = r.scores
-        # two-touch decode promotion: when this build first-touches a term
-        # (raw, not yet co-partitioned frame), the page plan must not be
-        # memoized either — the next identical query rebuilds over the
-        # promoted frames and THAT plan is the keeper
-        if r.volatile:
-            plan_key = None
         # per-query persisted frames (exact-path match tables, the
         # weighted-OR phase 2) — released after the page action
         handles = r.handles

@@ -641,8 +641,7 @@ class Route:
     None → count ``scores``. ``handles``: persisted frames to release()
     after the page's jobs. ``stats``: the pruned tier's block counters,
     {"est_blocks": n} when the estimate gated, plus "total_mode" for a
-    non-exact total policy. ``volatile``: the plan reads a first-touch
-    decode frame, so no caller may memoise a plan built over it."""
+    non-exact total policy."""
     kind: str
     reason: Optional[str]
     scores: DataFrame
@@ -650,7 +649,6 @@ class Route:
     count: Optional[tuple] = None
     handles: list = field(default_factory=list)
     stats: Optional[dict] = None
-    volatile: bool = False
 
 
 def _after_cursor(scores: DataFrame, after: tuple) -> DataFrame:
@@ -737,15 +735,18 @@ class SearchIndex:
             # never OOMs); the payload join then reads memory, not parquet
             self._docs = self._docs.persist()
         self._docs_cached = cache_docs
+        self._init_caches(cache_postings)
+
+    def _init_caches(self, cache_postings: bool) -> None:
+        """The serving stores: the decoded and match LRUs (persisted
+        frames, filled through _lru_put), the phrase dfs beside the match
+        tables, memoised plans and the per-query handle groups."""
+        from collections import OrderedDict
         self._vocab_cache: dict | None | bool = None
         self._cache_postings = cache_postings
         self._cache_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        from collections import OrderedDict
+            self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         self._decoded_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-        self._decoded_raw: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-        self._retired: list[DataFrame] = []
-        self._plan_volatile = False
         self._match_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
         self._df_count_cache: dict[tuple, int] = {}
         self._plan_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
@@ -770,7 +771,7 @@ class SearchIndex:
         positional variant (phrase/NEAR serving) over a SMALLER head set
         — positional frames cost ~6× the light ones, so a replica warms
         fewer of them. One materializing action over the union of the
-        promoted frames. 0 disables either tier. Returns {"docs": n,
+        filled frames. 0 disables either tier. Returns {"docs": n,
         "warmed_terms": k}.
 
         Defaults are deliberately modest: measured at 10M docs, warming
@@ -784,7 +785,7 @@ class SearchIndex:
         ~12 s at 1M docs, ~30 s at 10M — linear in head-term df, since
         the prefill IS a decode of the head postings. At 100× the next
         lever is already in place structurally: the fill is ONE union
-        action over all promoted frames, so its wall time is the
+        action over all filled frames, so its wall time is the
         slowest head term's partition-parallel decode, not the sum —
         growth past minutes means raising decode parallelism
         (shuffle partitions on the cache repartition), not splitting
@@ -837,33 +838,24 @@ class SearchIndex:
                 c.count()   # materialize once, before the per-term fan-out
 
             def build_frame(term: str, df_count: int, with_pos: bool):
-                plan = combined[with_pos].where(F.col("term") == term)
-                if df_count >= self.COPART_MIN_DF:
-                    plan = plan.repartition(self._cache_partitions,
-                                            "doc_id")
-                else:
-                    plan = plan.coalesce(1)   # narrow — no exchange
-                return plan.persist()
+                return self._cache_layout(
+                    combined[with_pos].where(F.col("term") == term),
+                    df_count)
 
             # frame construction is driver-side py4j chatter — overlap it
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=8) as pool:
                 built = list(pool.map(lambda a: build_frame(*a), todo))
-            promoted = []
             for (term, dfc, wp), df in zip(todo, built):
-                self._decoded_cache[("t", term, wp)] = df
-                promoted.append(df)
-                while len(self._decoded_cache) > self.DECODED_CACHE_MAX:
-                    _, old = self._decoded_cache.popitem(last=False)
-                    old.unpersist()
-            if promoted:
-                out = promoted[0].select("doc_id")
-                for p in promoted[1:]:
+                self._lru_put(self._decoded_cache, ("t", term, wp), df)
+            if built:
+                out = built[0].select("doc_id")
+                for p in built[1:]:
                     out = out.unionByName(p.select("doc_id"))
                 out.count()   # ONE action materializes every pinned frame
             for c in combined.values():
                 c.unpersist()   # per-term caches are self-contained now
-            warmed = len(promoted)
+            warmed = len(built)
         return {"docs": int(n), "warmed_terms": warmed}
 
     def close(self) -> None:
@@ -873,12 +865,6 @@ class SearchIndex:
         for df in self._decoded_cache.values():
             df.unpersist()
         self._decoded_cache.clear()
-        for df in self._decoded_raw.values():
-            df.unpersist()
-        self._decoded_raw.clear()
-        for df in self._retired:
-            df.unpersist()
-        self._retired.clear()
         for df in self._match_cache.values():
             df.unpersist()
         self._match_cache.clear()
@@ -898,64 +884,60 @@ class SearchIndex:
                         n_docs_hint: int | None = None) -> DataFrame:
         """Per-term/prefix decoded-postings cache (persisted, LRU).
 
-        Cached frames are CO-PARTITIONED on doc_id (one shuffle at cache
-        fill, amortized across every query touching the term): boolean
-        joins between cached terms then need no exchange at all, and the
-        OR aggregation shuffles pre-bucketed balanced partitions. Hot
-        AND latency measured 6× lower with this layout (0.19s → 0.03s
-        at 200k docs / 8 cores).
+        A miss fills the frame once, in its final layout (_cache_layout),
+        and the plan built over it is memoised on that first call. Head
+        terms and prefixes are CO-PARTITIONED on doc_id (the fill's one
+        shuffle is amortized across every query touching the key):
+        boolean joins between cached head terms then need no exchange at
+        all, and the OR aggregation shuffles pre-bucketed balanced
+        partitions. Hot AND latency measured 6× lower with this layout
+        (0.19s → 0.03s at 200k docs / 8 cores).
 
         ``n_docs_hint`` (the term's df, known driver-side for free)
         picks the width: terms under COPART_MIN_DF collapse to ONE
         partition — filling a 50-row frame across 32 shuffle partitions
         schedules 32 no-op tasks per term, which dominated the fuzzy
-        path's 30-variation cold fill. Head terms keep the full width,
-        so head∧head joins stay co-partitioned; tiny frames are
-        auto-broadcast by size stats anyway.
+        path's 30-variation cold fill. Tiny frames are auto-broadcast by
+        size stats anyway, so their partitioning never matters.
 
-        Two-touch promotion (round 4): the FIRST touch serves a plain
-        persisted decode — no repartition exchange sits in front of
-        query #1's action, which was the round-3 cold-latency regression
-        (one extra stage per new term with AQE off). The touch marks the
-        in-flight plan volatile so no memo layer caches a plan over the
-        transitional frame. The SECOND touch builds the co-partitioned
-        frame FROM the persisted raw rows (a shuffle of cached rows, not
-        a re-decode), retires the raw frame (unpersisted at the next
-        query's match_scores, by which time the promoting query's action
-        has materialized the swap), and hot serving proceeds on the
-        zero-exchange layout exactly as before."""
+        The trade: a term at or above COPART_MIN_DF that warm() did not
+        prefill (warm() fills the top terms by df in this same layout)
+        pays one exchange stage on its first touch."""
         if not self._cache_postings:
             return factory()
         hit = self._decoded_cache.get(key)
         if hit is not None:
             self._decoded_cache.move_to_end(key)
             return hit
-        width = self._cache_partitions if (n_docs_hint is None
-                                           or n_docs_hint >= self.COPART_MIN_DF) \
-            else 1
-        raw = self._decoded_raw.get(key)
-        if raw is None:
-            df = factory().persist()
-            self._decoded_raw[key] = df
-            while len(self._decoded_raw) > self.DECODED_CACHE_MAX:
-                _, old = self._decoded_raw.popitem(last=False)
-                old.unpersist()
-            self._plan_volatile = True
-            return df
-        del self._decoded_raw[key]
-        # width 1 = "one partition, please": coalesce is a NARROW dep —
-        # no exchange, the (small) term decodes in one task. Only head
-        # terms (≥ COPART_MIN_DF) pay the hash repartition that buys
-        # exchange-free boolean joins; small frames are auto-broadcast
-        # by size stats anyway, so their partitioning never matters.
-        df = (raw.coalesce(1) if width == 1
-              else raw.repartition(width, "doc_id")).persist()
-        self._retired.append(raw)
-        self._decoded_cache[key] = df
-        while len(self._decoded_cache) > self.DECODED_CACHE_MAX:
-            _, old = self._decoded_cache.popitem(last=False)
+        return self._lru_put(self._decoded_cache, key,
+                             self._cache_layout(factory(), n_docs_hint))
+
+    def _cache_layout(self, df: DataFrame,
+                      n_docs: int | None) -> DataFrame:
+        """The persisted layout of a cached decode: one partition below
+        COPART_MIN_DF (coalesce is a NARROW dep — no exchange, the term
+        decodes in one task), else hash-partitioned on doc_id at the
+        full cache width (also for prefixes, which have no df)."""
+        if n_docs is not None and n_docs < self.COPART_MIN_DF:
+            return df.coalesce(1).persist()
+        return df.repartition(self._cache_partitions, "doc_id").persist()
+
+    def _lru_put(self, store, key: tuple, df: DataFrame) -> DataFrame:
+        """Insert the persisted ``df`` into ``store`` (the decoded or
+        match LRU) and unpersist what falls past DECODED_CACHE_MAX; an
+        evicted match table takes its df entry with it."""
+        store[key] = df
+        while len(store) > self.DECODED_CACHE_MAX:
+            old_key, old = store.popitem(last=False)
             old.unpersist()
+            self._df_count_cache.pop(old_key, None)
         return df
+
+    def _cache_df(self, key: tuple, value) -> None:
+        """Record a match table's standalone df (or a dead-include
+        verdict) when caching is on."""
+        if self._cache_postings:
+            self._df_count_cache[key] = value
 
     #: compiled-plan LRU size (plans are driver objects, no executor state)
     PLAN_CACHE_MAX = 256
@@ -973,33 +955,11 @@ class SearchIndex:
         if hit is not None:
             self._plan_cache.move_to_end(key)
             return hit
-        # volatility: a plan built over a FIRST-TOUCH (raw, not yet
-        # co-partitioned) decode frame must not be memoized — the next
-        # call rebuilds over the promoted co-partitioned frame. The flag
-        # composes across nested _cached_plan levels (topk → match_scores).
-        outer = self._plan_volatile
-        self._plan_volatile = False
         df = builder()
-        volatile = self._plan_volatile
-        self._plan_volatile = outer or volatile
-        if volatile:
-            return df
         self._plan_cache[key] = df
         while len(self._plan_cache) > self.PLAN_CACHE_MAX:
             self._plan_cache.popitem(last=False)
         return df
-
-    def _tracked(self, build) -> Route:
-        """Run one Route build and record on the Route whether it read a
-        first-touch decode frame; the flag still reaches an enclosing
-        _cached_plan level, as in _cached_plan itself."""
-        outer, self._plan_volatile = self._plan_volatile, False
-        try:
-            r = build()
-        finally:
-            volatile = self._plan_volatile
-            self._plan_volatile = outer or volatile
-        return replace(r, volatile=volatile) if r.volatile != volatile else r
 
     def _decoded_for_term(self, term: str,
                           with_positions: bool = True) -> DataFrame:
@@ -1572,13 +1532,7 @@ class SearchIndex:
             if hit is not None:
                 self._match_cache.move_to_end(key)
                 return hit
-            mt = factory().persist()
-            self._match_cache[key] = mt
-            while len(self._match_cache) > self.DECODED_CACHE_MAX:
-                k, old = self._match_cache.popitem(last=False)
-                old.unpersist()
-                self._df_count_cache.pop(k, None)
-            return mt
+            return self._lru_put(self._match_cache, key, factory().persist())
 
         driver_ok: dict = {}
         driver_rows: dict = {}
@@ -1722,8 +1676,7 @@ class SearchIndex:
                       for r in batched.groupBy("pi").count().collect()}
             for i, (p, key) in enumerate(pending):
                 phrase_df[p] = counts.get(i, 0)
-                if self._cache_postings:
-                    self._df_count_cache[key] = phrase_df[p]
+                self._cache_df(key, phrase_df[p])
 
         near_tables: dict = {}
         for nr in nears:
@@ -1852,20 +1805,10 @@ class SearchIndex:
         if node is None:
             return Route("exact", "empty", self.spark.createDataFrame(
                 [], "doc_id long, score double"))
-        # retired raw frames (replaced by promoted co-partitioned twins
-        # during an EARLIER query's plan build) are safe to drop now: that
-        # query's action has run and materialized the swap. Caveat: a
-        # plan-only caller (debug_query/explain, plan-shape tests) builds
-        # the promoting plan without running an action, so the swap may
-        # not be materialized yet — the promoted entry then re-decodes on
-        # first use. Perf-only; correctness is unaffected.
-        for old in self._retired:
-            old.unpersist()
-        self._retired.clear()
         with decode_scope():
-            return self._tracked(lambda: self._cached_plan(
+            return self._cached_plan(
                 ("ms", node, wvec),
-                lambda: self._match_scores_build(node, wvec)))
+                lambda: self._match_scores_build(node, wvec))
 
     def _match_scores_build(self, node, wvec) -> Route:
         slots, phrase_tables, phrase_df, near_tables, handles = \
@@ -2120,8 +2063,7 @@ class SearchIndex:
             raise ValueError(f"unknown node {n!r}")
 
         dead = doc_set(node).limit(1).count() == 0
-        if self._cache_postings:
-            self._df_count_cache[key] = dead
+        self._cache_df(key, dead)
         return dead
 
     def _dead_not_quirk_slots(self, root, phrase_tables,
@@ -2241,8 +2183,7 @@ class SearchIndex:
         SqliteStorage::search query (top-k pruning under ORDER BY rank
         LIMIT, src/Storage/SqliteStorage.php:1104-1134)."""
         with decode_scope():
-            return self._tracked(lambda: self._route(
-                node, k, fids, wvec, after, total, complete))
+            return self._route(node, k, fids, wvec, after, total, complete)
 
     def _route(self, node, k, fids, wvec, after, total, complete) -> Route:
         from .wand import _is_simple
@@ -2397,7 +2338,16 @@ class SearchIndex:
         a cursor deeper than the cap falls back to the exact path. With
         the default cost gate the deep rounds also self-gate: the per-k
         gate floor grows with k', so pruning only engages where the
-        block count justifies it."""
+        block count justifies it.
+
+        The bite check below (a round decoding more than half the
+        blocks) is what sends OR cursor pages exact on flat-bound
+        corpora: on the 600-turn skew corpus at block_size 4 (the cursor
+        tests' index), ``"zzhead" OR "say"`` decodes 168 of 168 blocks
+        at k' = 64 (zzhead's 152 blocks carry near-equal bounds, and
+        "say"'s 16 blocks span ~29 docs each), so pages 2–5 route exact
+        with reason "deepening"; ``zzhead`` alone decodes 69 of 152 and
+        its pages route cursor."""
         kp = max(4 * k, 64)
         # two rounds, like the filtered deepening: a page-by-page cursor
         # walk (the real serving pattern — each next page sits ~k ranks

@@ -471,8 +471,6 @@ class GlobalSegmentedIndex(SearchIndex):
                  cache_postings: bool = True, cache_docs: bool = True):
         # deliberately NOT calling SearchIndex.__init__ — the relations
         # come from the union of parts instead of one directory
-        from collections import OrderedDict
-
         from pyspark.sql import functions as F
 
         from .build import load_docs
@@ -553,18 +551,7 @@ class GlobalSegmentedIndex(SearchIndex):
                 .where(F.col("df") > 0))
         self._docs = docs.persist() if cache_docs else docs
         self._docs_cached = cache_docs
-        self._vocab_cache = None
-        self._cache_postings = cache_postings
-        self._cache_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        self._decoded_cache = OrderedDict()
-        self._decoded_raw = OrderedDict()
-        self._retired = []
-        self._plan_volatile = False
-        self._match_cache = OrderedDict()
-        self._df_count_cache = {}
-        self._plan_cache = OrderedDict()
-        self._handle_groups = []
+        self._init_caches(cache_postings)
         # everything else (scoring, caches, prepared plans, release/close)
         # is inherited SearchIndex behavior over the union relations
 

@@ -534,9 +534,9 @@ def pruned_scored(index: SearchIndex, node, k: int,
                 if index._df_count_cache.get(key) is None:
                     tbl = index._match_cache.get(key)
                     if tbl is not None:
-                        index._df_count_cache[key] = int(tbl.count())
+                        index._cache_df(key, int(tbl.count()))
                     elif sub is None and sinfo.get("reason") == "empty":
-                        index._df_count_cache[key] = 0
+                        index._cache_df(key, 0)
                     else:   # unexpected route — keep the old behavior
                         info["reason"] = "cold-phrase-df"
                         return None, info
@@ -685,11 +685,7 @@ def pruned_scored(index: SearchIndex, node, k: int,
             tbl = index._phrase_match(
                 node, frames={t: frames[t] for t in terms}).persist()
             if index._cache_postings:
-                index._match_cache[key] = tbl
-                while len(index._match_cache) > index.DECODED_CACHE_MAX:
-                    k2, old = index._match_cache.popitem(last=False)
-                    old.unpersist()
-                    index._df_count_cache.pop(k2, None)
+                index._lru_put(index._match_cache, key, tbl)
             else:
                 index._register_handles([tbl])
         df_ph = index._df_count_cache.get(key)
