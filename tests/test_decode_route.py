@@ -484,8 +484,11 @@ def test_planner_routes_per_facade(spark, skew_dirs, monkeypatch):
         after = (p1[-1]["score"], p1[-1]["doc_id"])
         page = _page(si.search("zzhead", k=10, after=after))
         # zzhead's 38 blocks are too few for θ to bite at k' = 64, so
-        # the cursor tier hands the page to the exact path
+        # the cursor tier hands the page to the exact path, keeping the
+        # round's block counters as evidence
         assert (seen[-1].kind, seen[-1].reason) == ("exact", "deepening")
+        stats = seen[-1].stats
+        assert stats["blocks_decoded"] > 0.5 * stats["blocks_total"], stats
         assert page == _page(si_twin.search("zzhead", k=10, after=after))
         first = eng.search("main", SearchQuery(query="zzhead", limit=10,
                                                bypass_cache=True))

@@ -179,6 +179,23 @@ def test_flat_or_skips_qualification_column(spark, index):
     assert len(_shuffles(nodes)) == 0, nodes
 
 
+def test_pruned_and_broadcasts_into_largest(spark, index):
+    """The pruned tier scores through SearchIndex._score with
+    copart=False: its flat AND broadcasts the rarer sides into the
+    largest pruned frame and never takes the co-partitioned plain join,
+    which over pruned (never co-partitioned) frames would plan a sort-
+    merge join."""
+    from yetisearch_spark.query import parse_query
+    from yetisearch_spark.wand import pruned_scored
+    with no_aqe(spark):
+        scored, info = pruned_scored(index, parse_query("data AND process"),
+                                     10, gate_blocks=0)
+        assert scored is not None and info["shape"] == "and", info
+        plan = _plan(scored)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
 def test_broadcast_guard_falls_back_to_shuffle(index):
     """With the broadcast cap at 0 (simulating head terms at corpus
     scale), AND/OR must take the single-shuffle aggregation and return

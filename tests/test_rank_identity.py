@@ -126,6 +126,23 @@ def test_or(index, oracle):
         _assert_rank_identical(got, want, f"or:{terms}")
 
 
+@pytest.mark.parametrize("w", [1.2, 0.8])
+@pytest.mark.parametrize("kind", ["single", "and", "or"])
+def test_single_field_weighted(index, oracle, kind, w):
+    """Single-field weights score a single-term slot from tf alone (the
+    rule both serving tiers share); the page must still be FTS5's
+    bm25(fts, w)."""
+    head, mid, tail, _ = _pick_terms(oracle)
+    terms = {"single": [mid[0]], "and": [head[0], mid[0]],
+             "or": [mid[0], tail[0]]}[kind]
+    q = {"single": " ", "and": " AND ", "or": " OR "}[kind].join(
+        f'"{t}"' for t in terms)
+    rows = index.search(q, k=10, weights={"text": w}).collect()
+    got = [(r["doc_id"], r["score"]) for r in rows]
+    want = oracle.top_k(oracle.match_string(kind, terms), weights=[w])
+    _assert_rank_identical(got, want, f"weighted {kind}:{terms} w={w}")
+
+
 def test_phrase(index, oracle, corpus):
     # find real adjacent pairs in the analyzed corpus so phrases have hits
     token_lists = analyze_batch(corpus["text"].tolist()[:300])

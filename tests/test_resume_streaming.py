@@ -49,9 +49,10 @@ def test_resume_skips_completed_and_matches_full_build(spark, tmp_path):
 
 
 def test_segments_and_compaction(spark, tmp_path):
-    from yetisearch_spark.streaming import (SegmentedIndex, append_segment,
-                                            compact, delete_docs,
-                                            high_water_doc_id, list_segments)
+    from yetisearch_spark.streaming import (GlobalSegmentedIndex,
+                                            append_segment, compact,
+                                            delete_docs, high_water_doc_id,
+                                            list_segments, live_docs)
 
     base_pdf = generate_transcripts(400, seed=44)
     extra_pdf = generate_transcripts(200, seed=45)
@@ -65,10 +66,11 @@ def test_segments_and_compaction(spark, tmp_path):
     assert list_segments(idx_dir) == [0]
     assert high_water_doc_id(idx_dir) == 600
 
-    seg = SegmentedIndex(spark, idx_dir)
+    seg = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     assert seg.n_docs == 600
     # segment doc_ids start above the base index
-    seg_docs = seg.docs()
+    seg_docs = live_docs(spark, idx_dir)
     assert seg_docs.count() == 600
     assert seg_docs.agg(F.max("doc_id")).collect()[0][0] == 599
 
@@ -78,7 +80,8 @@ def test_segments_and_compaction(spark, tmp_path):
     # tombstone a hit, verify it disappears from the view
     victim = hits[0]["doc_id"]
     delete_docs(spark, idx_dir, [victim])
-    seg2 = SegmentedIndex(spark, idx_dir)
+    seg2 = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     assert all(r["doc_id"] != victim for r in seg2.search("search", k=10).collect())
 
     # compaction produces a clean single index without the victim
@@ -92,8 +95,9 @@ def test_segment_doc_ids_consistent_across_postings_and_docs(spark, tmp_path):
     """A segment search hit's doc_id (postings space) must join back to the
     correct segment document text (docs space) — regression for the
     doc_id_base shift living only in the manifest."""
-    from yetisearch_spark.streaming import (SegmentedIndex, append_segment,
-                                            delete_docs)
+    from yetisearch_spark.streaming import (GlobalSegmentedIndex,
+                                            append_segment, delete_docs,
+                                            live_docs)
 
     base_pdf = generate_transcripts(150, seed=71)
     seg_pdf = generate_transcripts(60, seed=72)
@@ -106,14 +110,15 @@ def test_segment_doc_ids_consistent_across_postings_and_docs(spark, tmp_path):
     build_index(spark, spark.createDataFrame(base_pdf), idx_dir, num_buckets=4)
     append_segment(spark, idx_dir, spark.createDataFrame(seg_pdf), epoch=0)
 
-    seg = SegmentedIndex(spark, idx_dir)
+    seg = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     hits = seg.search("zebrafish", k=10).collect()
     assert len(hits) == 5
     hit_ids = {r["doc_id"] for r in hits}
     # postings-space ids are above the base high-water mark
     assert all(d >= 150 for d in hit_ids)
     # and join back to exactly the marker documents in the docs view
-    joined = (seg.docs()
+    joined = (live_docs(spark, idx_dir)
               .where(F.col("doc_id").isin(list(hit_ids)))
               .select("text").collect())
     assert len(joined) == 5
@@ -122,14 +127,16 @@ def test_segment_doc_ids_consistent_across_postings_and_docs(spark, tmp_path):
     # tombstoning a search-hit id removes that document from BOTH spaces
     victim = sorted(hit_ids)[0]
     delete_docs(spark, idx_dir, [victim])
-    seg2 = SegmentedIndex(spark, idx_dir)
+    seg2 = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     assert all(r["doc_id"] != victim
                for r in seg2.search("zebrafish", k=10).collect())
-    assert seg2.docs().where(F.col("doc_id") == victim).count() == 0
+    assert live_docs(spark, idx_dir).where(
+        F.col("doc_id") == victim).count() == 0
 
 
 def test_delete_by_conv_prefix(spark, tmp_path):
-    from yetisearch_spark.streaming import SegmentedIndex, delete_by_conv_prefix
+    from yetisearch_spark.streaming import delete_by_conv_prefix, live_docs
 
     pdf = generate_transcripts(300, seed=66)
     idx_dir = str(tmp_path / "prefix_idx")
@@ -138,8 +145,7 @@ def test_delete_by_conv_prefix(spark, tmp_path):
     expected = int(pdf["conv_id"].str.startswith(target_prefix).sum())
     n = delete_by_conv_prefix(spark, idx_dir, target_prefix)
     assert n == expected
-    seg = SegmentedIndex(spark, idx_dir)
-    assert seg.docs().where(
+    assert live_docs(spark, idx_dir).where(
         F.col("conv_id").startswith(target_prefix)).count() == 0
 
 
@@ -147,8 +153,8 @@ def test_multifield_segments_and_compaction_inherit_fields(spark, tmp_path):
     """Segments and compaction of a multi-field index must index the same
     fields (and preserve weighted search), not silently fall back to
     single-field."""
-    from yetisearch_spark.streaming import (SegmentedIndex, append_segment,
-                                            compact)
+    from yetisearch_spark.streaming import (GlobalSegmentedIndex,
+                                            append_segment, compact)
 
     base = generate_transcripts(150, seed=91)
     base["title"] = base["text"].str.split().str[:3].str.join(" ")
@@ -163,7 +169,8 @@ def test_multifield_segments_and_compaction_inherit_fields(spark, tmp_path):
 
     seg_manifest = load_manifest(os.path.join(idx_dir, "segments", "epoch=0"))
     assert seg_manifest["config"]["fields"] == ["title", "text"]
-    seg = SegmentedIndex(spark, idx_dir)
+    seg = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     hits = seg.search("zygote", k=5).collect()
     assert len(hits) == 5  # title-only term found → segment indexed titles
 
@@ -180,7 +187,8 @@ def test_multifield_segments_and_compaction_inherit_fields(spark, tmp_path):
 def test_upsert_documents(spark, tmp_path):
     """S2/S4: re-ingesting an existing (conv_id, turn_idx) replaces the old
     version — searches hit only the new text, old ids are tombstoned."""
-    from yetisearch_spark.streaming import SegmentedIndex, upsert_documents
+    from yetisearch_spark.streaming import (GlobalSegmentedIndex,
+                                            live_docs, upsert_documents)
 
     pdf = generate_transcripts(120, seed=81)
     idx_dir = str(tmp_path / "upsert_idx")
@@ -198,11 +206,12 @@ def test_upsert_documents(spark, tmp_path):
     assert out["replaced"] == 1
     assert out["inserted"] == 11
 
-    seg = SegmentedIndex(spark, idx_dir)
+    seg = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     hits = seg.search("walrus", k=5).collect()
     assert len(hits) == 1 and hits[0]["doc_id"] >= 120
     # the replaced identity resolves to exactly one live doc — the new one
-    live = seg.docs().where(
+    live = live_docs(spark, idx_dir).where(
         (F.col("conv_id") == victim["conv_id"])
         & (F.col("turn_idx") == int(victim["turn_idx"]))).collect()
     assert len(live) == 1 and "walrus" in live[0]["text"]

@@ -24,7 +24,8 @@ TRANSCRIPT_SCHEMA = StructType([
 
 
 def test_readstream_foreachbatch_segments(spark, tmp_path):
-    from yetisearch_spark.streaming import (SegmentedIndex, list_segments,
+    from yetisearch_spark.streaming import (GlobalSegmentedIndex,
+                                            list_segments, live_docs,
                                             streaming_index_writer)
 
     # base index
@@ -53,7 +54,8 @@ def test_readstream_foreachbatch_segments(spark, tmp_path):
     q.awaitTermination(300)
 
     assert list_segments(idx_dir)  # ≥1 committed segment
-    seg = SegmentedIndex(spark, idx_dir)
+    seg = GlobalSegmentedIndex(spark, idx_dir, cache_postings=False,
+                               cache_docs=False)
     assert seg.n_docs == 200 + 80
     hits = seg.search("pangolin", k=10).collect()
     assert len(hits) == 2
@@ -61,6 +63,6 @@ def test_readstream_foreachbatch_segments(spark, tmp_path):
     # streamed docs join back to their text (id-space consistency under
     # streaming ingestion)
     ids = [r["doc_id"] for r in hits]
-    texts = [r["text"] for r in
-             seg.docs().where(F.col("doc_id").isin(ids)).collect()]
+    texts = [r["text"] for r in live_docs(spark, idx_dir)
+             .where(F.col("doc_id").isin(ids)).collect()]
     assert all("pangolin" in t for t in texts)

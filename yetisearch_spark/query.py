@@ -640,7 +640,8 @@ class Route:
     a (frame, base) count branch (total = base + rows of frame); both
     None → count ``scores``. ``handles``: persisted frames to release()
     after the page's jobs. ``stats``: the pruned tier's block counters,
-    {"est_blocks": n} when the estimate gated, plus "total_mode" for a
+    {"est_blocks": n} when the estimate gated, a deepening fallback's
+    last-round counters plus its "k_prime", and "total_mode" for a
     non-exact total policy."""
     kind: str
     reason: Optional[str]
@@ -1596,8 +1597,8 @@ class SearchIndex:
                     continue
                 t = pn.terms[0]
                 use_count[t] = use_count.get(t, 0) + 1
-                pos_need[t] = (pos_need.get(t, False) or wvec is not None
-                               or pn in near_members)
+                pos_need[t] = (pos_need.get(t, False) or pn in near_members
+                               or self._weights_need_positions(wvec))
             for nr in nears:
                 if nr in driver_nears:
                     continue
@@ -1629,7 +1630,8 @@ class SearchIndex:
                 # single-term scoring reads only tf/doc_len — skip the
                 # position-varint decode unless this slot feeds a NEAR
                 # trim or field-weighted (positions>>FIELD_SHIFT) scoring
-                need_pos = wvec is not None or p in near_members
+                need_pos = (p in near_members
+                            or self._weights_need_positions(wvec))
                 if shared_frames is not None and p.terms[0] in shared_frames:
                     phrase_tables[p] = shared_frames[p.terms[0]].select(
                         "doc_id", "tf", "doc_len", "positions")
@@ -1710,8 +1712,11 @@ class SearchIndex:
         return slots, phrase_tables, phrase_df, near_tables, handles
 
     def _contrib_expr(self, tf_col, idf: float):
+        return self._bm25(F.col(tf_col).cast("double"), idf)
+
+    def _bm25(self, tf, idf: float):
+        """FTS5's per-phrase bm25 term over a double tf expression."""
         k1, b = BM25_K1, BM25_B
-        tf = F.col(tf_col).cast("double")
         return (F.lit(idf) * tf * (k1 + 1.0)
                 / (tf + k1 * (1.0 - b + b * F.col("doc_len").cast("double")
                               / self.avgdl)))
@@ -1735,31 +1740,32 @@ class SearchIndex:
 
         return F.aggregate(arr, F.lit(0.0), step)
 
-    def _weighted_tf(self, pos_col: str, wvec: tuple[float, ...]):
-        return self._weighted_tally_expr(
-            F.coalesce(F.col(pos_col), F.array().cast("array<int>")), wvec)
+    def _weights_need_positions(self, wvec) -> bool:
+        """Do field weights read positions (positions >> FIELD_SHIFT)? Not
+        on a single-field index, where a single-term slot folds w0 over
+        tf instead (_phrase_contrib) — so its frames decode light."""
+        return wvec is not None and len(self.fields) > 1
 
-    def _contrib_expr_weighted(self, pos_col: str, idf: float,
-                               wvec: tuple[float, ...]):
-        k1, b = BM25_K1, BM25_B
-        tf = self._weighted_tf(pos_col, wvec)
-        return (F.lit(idf) * tf * (k1 + 1.0)
-                / (tf + k1 * (1.0 - b + b * F.col("doc_len").cast("double")
-                              / self.avgdl)))
-
-    def _contrib_expr_weighted_tfonly(self, idf: float, w0: float):
-        """Single-FIELD weighted contribution from the tf column alone
-        (round 7): with one field every position maps to field 0, so the
-        positional tally is a left fold adding w0 exactly tf times —
-        reproduced bit-for-bit by folding over sequence(1, tf) (same
-        IEEE add chain of the same constant), no positions decoded.
-        Unlocks position-free pruned serving for weighted single/OR."""
-        k1, b = BM25_K1, BM25_B
-        tf = F.aggregate(F.sequence(F.lit(1), F.col("tf")), F.lit(0.0),
-                         lambda acc, _x: acc + F.lit(float(w0)))
-        return (F.lit(idf) * tf * (k1 + 1.0)
-                / (tf + k1 * (1.0 - b + b * F.col("doc_len").cast("double")
-                              / self.avgdl)))
+    def _phrase_contrib(self, p, idf: float, wvec):
+        """BM25 contribution of a phrase/prefix slot row, the rule of both
+        serving tiers: unweighted from tf; field-weighted from the
+        positions' field tally — or, for a single-term slot whose weights
+        need no positions, from tf alone: with one field the positional
+        tally is a left fold adding w0 exactly tf times, reproduced
+        bit-for-bit by folding over sequence(1, tf) (same IEEE add chain
+        of the same constant), no positions decoded."""
+        if wvec is None:
+            return self._contrib_expr("tf", idf)
+        if (not self._weights_need_positions(wvec)
+                and isinstance(p, Phrase) and len(p.terms) == 1):
+            w0 = F.lit(float(wvec[0]))
+            tf = F.aggregate(F.sequence(F.lit(1), F.col("tf")), F.lit(0.0),
+                             lambda acc, _x: acc + w0)
+        else:
+            tf = self._weighted_tally_expr(
+                F.coalesce(F.col("positions"), F.array().cast("array<int>")),
+                wvec)
+        return self._bm25(tf, idf)
 
     def _normalize_weights(self, weights) -> Optional[tuple[float, ...]]:
         """dict {field: w} or sequence → weight vector in index-field
@@ -1811,67 +1817,76 @@ class SearchIndex:
                 lambda: self._match_scores_build(node, wvec))
 
     def _match_scores_build(self, node, wvec) -> Route:
+        """The exact route's plan: _plan builds the complete match
+        tables and _score scores them; the decoded-postings cache, when
+        on, co-partitions every frame _plan reads."""
         slots, phrase_tables, phrase_df, near_tables, handles = \
             self._plan(node, wvec)
         if not slots:
             return Route("exact", None, self.spark.createDataFrame(
                 [], "doc_id long, score double"))
+        out = self._score(node, slots, phrase_tables, phrase_df,
+                          near_tables, wvec, self._cache_postings)
+        return Route("exact", None, out, handles=handles)
 
-        def phrase_contrib(p):
-            idf = self.idf(phrase_df[p])
-            if wvec is None:
-                return self._contrib_expr("tf", idf)
-            return self._contrib_expr_weighted("positions", idf, wvec)
+    def _score(self, node, slots, phrase_tables, phrase_df, near_tables,
+               wvec, copart: bool) -> DataFrame:
+        """(doc_id, score) of the match tables of ``node``'s ``slots``
+        (_collect_slots order): the one BM25 slot scorer of the exact
+        tier (over _plan's tables) and the block-max pruned tier (over
+        tables built from its pruned frames, wand.pruned_scored).
+
+        ``phrase_df`` holds every slot phrase's and NEAR member's df (the
+        slot idf); a slot whose table is absent from ``phrase_tables`` /
+        ``near_tables`` matches nothing and emits no row. ``copart``: the
+        tables are co-partitioned on doc_id (the exact tier's decoded
+        cache), so a flat AND joins them without broadcasting; pruned
+        frames never are."""
+        def contrib(p):
+            return self._phrase_contrib(p, self.idf(phrase_df[p]), wvec)
+
+        def near_contrib(nr, m):
+            # near-table tf_m is already field-weighted when wvec is set
+            return self._contrib_expr(f"tf_{m}",
+                                      self.idf(phrase_df[nr.phrases[m]]))
 
         # no-shuffle fast path: every slot sources from ONE match table
         # (single phrase/prefix, or one NEAR group) — score is a plain
         # projection, qualification is row existence. Saves the whole
         # aggregation stage on the most common query shapes.
         if isinstance(node, (Phrase, PrefixNode)):
-            out = phrase_tables[node].select(
-                "doc_id", phrase_contrib(node).alias("score"))
-            return Route("exact", None, out, handles=handles)
+            return phrase_tables[node].select(
+                "doc_id", contrib(node).alias("score"))
         if isinstance(node, Near):
             score = None
             for m in range(len(node.phrases)):
-                # near-table tf_m is already field-weighted when wvec set
-                c = self._contrib_expr(f"tf_{m}",
-                                       self.idf(phrase_df[node.phrases[m]]))
+                c = near_contrib(node, m)
                 score = c if score is None else score + c
-            out = near_tables[node].select("doc_id", score.alias("score"))
-            return Route("exact", None, out, handles=handles)
+            return near_tables[node].select("doc_id", score.alias("score"))
 
-        # shuffle-free boolean fast paths over flat single-term trees.
+        # shuffle-free boolean fast path over a flat AND of single terms.
         # Broadcast-join safety: every table except the largest must be
-        # under BROADCAST_DF_CAP docs — an AND/OR of two head terms at
-        # 10^12 docs falls back to the shuffle instead of OOMing an
-        # executor with a giga-row broadcast.
-        def _flat_single_terms(n):
-            return all(isinstance(c, Phrase) and len(c.terms) == 1
-                       for c in n.children)
-
-        def _broadcastable(kids):
-            dfs = sorted(phrase_df[p] for p in kids)
-            return all(d <= self.BROADCAST_DF_CAP for d in dfs[:-1])
-
-        # AND: inner join of the (cached) per-term match tables,
-        # contributions summed in slot order (all slots present on every
-        # surviving row, so the ordered projection is float-identical to
-        # the fold). With the co-partitioned decode cache the joins need
-        # NO exchange (any term sizes — nothing is broadcast); without
-        # caches, rarer sides broadcast into the most frequent term's
-        # scan, guarded by the broadcast cap.
-        if (isinstance(node, And) and _flat_single_terms(node)
-                and (self._cache_postings or _broadcastable(node.children))):
-            kids = list(node.children)
+        # under BROADCAST_DF_CAP docs — an AND of two head terms at 10^12
+        # docs falls back to the shuffle instead of OOMing an executor
+        # with a giga-row broadcast.
+        # Inner join of the per-term match tables, contributions summed
+        # in slot order (all slots present on every surviving row, so the
+        # ordered projection is float-identical to the fold). Co-
+        # partitioned tables join with NO exchange (any term sizes —
+        # nothing is broadcast); otherwise rarer sides broadcast into the
+        # most frequent term's scan, guarded by the broadcast cap.
+        kids = list(node.children) if isinstance(node, And) else []
+        if (kids and all(isinstance(c, Phrase) and len(c.terms) == 1
+                         for c in kids)
+                and (copart or all(
+                    d <= self.BROADCAST_DF_CAP
+                    for d in sorted(phrase_df[p] for p in kids)[:-1]))):
             largest = max(range(len(kids)), key=lambda i: phrase_df[kids[i]])
             joined = None
-            cols = []
             for i, p in enumerate(kids):
-                c = phrase_contrib(p).alias(f"c{i}")
-                part = phrase_tables[p].select("doc_id", c)
-                cols.append(f"c{i}")
-                if self._cache_postings:
+                part = phrase_tables[p].select(
+                    "doc_id", contrib(p).alias(f"c{i}"))
+                if copart:
                     joined = part if joined is None \
                         else joined.join(part, "doc_id")
                 elif joined is None:
@@ -1882,10 +1897,10 @@ class SearchIndex:
                 else:
                     joined = joined.join(F.broadcast(part), "doc_id")
             score = None
-            for name in cols:  # slot order == children order
-                score = F.col(name) if score is None else score + F.col(name)
-            out = joined.select("doc_id", score.alias("score"))
-            return Route("exact", None, out, handles=handles)
+            for i in range(len(kids)):  # slot order == children order
+                c = F.col(f"c{i}")
+                score = c if score is None else score + c
+            return joined.select("doc_id", score.alias("score"))
 
         # (Two measured dead ends for shuffle-free OR, kept as notes: a
         # disjoint-subset decomposition — A∪B = (A∖B)∪(B∖A)∪(A∩B) with
@@ -1898,18 +1913,17 @@ class SearchIndex:
 
         contribs = None
         for i, slot in enumerate(slots):
-            if slot[0] == "phrase":
-                p = slot[1]
-                branch = phrase_tables[p].select(
-                    "doc_id", F.lit(i).alias("slot"),
-                    phrase_contrib(p).alias("c"))
-            else:
-                _, nr, member = slot
-                idf = self.idf(phrase_df[nr.phrases[member]])
-                branch = near_tables[nr].select(
-                    "doc_id", F.lit(i).alias("slot"),
-                    self._contrib_expr(f"tf_{member}", idf).alias("c"))
+            tbl = (phrase_tables if slot[0] == "phrase"
+                   else near_tables).get(slot[1])
+            if tbl is None:
+                continue
+            c = (contrib(slot[1]) if slot[0] == "phrase"
+                 else near_contrib(*slot[1:]))
+            branch = tbl.select("doc_id", F.lit(i).alias("slot"),
+                                c.alias("c"))
             contribs = branch if contribs is None else contribs.unionByName(branch)
+        if contribs is None:
+            return self.spark.createDataFrame([], "doc_id long, score double")
 
         # per-slot conditional sums: every slot sources at most ONE row
         # per doc (each slot is one match table), so sum(when(slot=i, c))
@@ -1966,14 +1980,11 @@ class SearchIndex:
             score = c if score is None else score + c
         # a flat OR of single-table children is trivially qualified: every
         # contribution row already implies a match
-        trivially_qualified = isinstance(node, Or) and all(
-            isinstance(c, (Phrase, PrefixNode, Near)) for c in node.children)
-        if trivially_qualified:
-            out = agg.select("doc_id", score.alias("score"))
-        else:
-            out = (agg.where(_qual_expr(node, [0], present))
-                   .select("doc_id", score.alias("score")))
-        return Route("exact", None, out, handles=handles)
+        if not (isinstance(node, Or) and all(
+                isinstance(c, (Phrase, PrefixNode, Near))
+                for c in node.children)):
+            agg = agg.where(_qual_expr(node, [0], present))
+        return agg.select("doc_id", score.alias("score"))
 
     def _include_dead(self, node, phrase_df) -> bool:
         """Is a NOT node's include side DEAD in FTS5's doclist sense —
@@ -2218,7 +2229,7 @@ class SearchIndex:
         return replace(
             exact, reason=info.get("reason", "est_blocks"),
             stats=({"est_blocks": info["est_blocks"]}
-                   if "est_blocks" in info else None),
+                   if "est_blocks" in info else info.get("stats")),
             # an exact cursor page counts the whole match set; the
             # caller cuts the page at the cursor
             count=((exact.scores, 0)
@@ -2309,7 +2320,7 @@ class SearchIndex:
             if cand.count() >= k:
                 break
         else:
-            return None, {"reason": "deepening"}
+            return None, _deepened(info, kp)
         r = Route("filtered", None, cand, handles=info.get("handles", []),
                   stats=info.get("prune_stats"))
         if total is not None:
@@ -2368,7 +2379,7 @@ class SearchIndex:
                 # the weakened k'-th bound no longer excludes blocks):
                 # this round ≈ a full decode, and deeper rounds only get
                 # worse; the exact path does that one full pass better
-                return None, {"reason": "deepening"}
+                return None, _deepened(info, kp)
             topkp = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
                      .limit(kp))
             surv = _after_cursor(topkp, after).persist()
@@ -2383,31 +2394,29 @@ class SearchIndex:
                              stats=ps), info
             surv.unpersist()
             kp *= 4
-        return None, {"reason": "deepening"}  # cursor too deep for the rounds
+        # cursor too deep for the rounds; the last one ran at kp // 4
+        return None, _deepened(info, kp // 4)
 
     def count(self, query) -> int:
-        """Match count (reference M8, src/Storage/SqliteStorage.php:1275-1358)."""
+        """Match count (reference M8, src/Storage/SqliteStorage.php:1275-1358):
+        the rows of the exact route's scores — context gates and the
+        dead-NOT leak change scores, never membership."""
         node = parse_query(query) if isinstance(query, str) else query
         if node is None:
             return 0
-        with decode_scope():
-            slots, phrase_tables, _, near_tables, handles = self._plan(node)
-        if not slots:
-            return 0
+        r = self._exact(node, None)
         try:
-            contribs = None
-            for i, slot in enumerate(slots):
-                t = (phrase_tables[slot[1]] if slot[0] == "phrase"
-                     else near_tables[slot[1]])
-                branch = t.select("doc_id", F.lit(i).alias("slot"))
-                contribs = branch if contribs is None else contribs.unionByName(branch)
-            flags = [F.max(F.when(F.col("slot") == i, F.lit(True)))
-                     .alias(f"_s{i}") for i in range(len(slots))]
-            return (contribs.groupBy("doc_id").agg(*flags)
-                    .where(_qual_expr(node, [0], _slot_present_factory()))
-                    .count())
+            return r.scores.count()
         finally:
-            self.release(handles)
+            self.release(r.handles)
+
+
+def _deepened(info: dict, kp: int) -> dict:
+    """Gate info of a deepening round that falls back to the exact path:
+    reason "deepening", with the last round's block counters and k′ as
+    the exact Route's stats."""
+    return {"reason": "deepening",
+            "stats": {**(info.get("prune_stats") or {}), "k_prime": kp}}
 
 
 def _slot_gates(root, present) -> dict[int, list]:

@@ -27,7 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import build_index, load_manifest
+from .build import build_index, load_docs, load_manifest
 from .query import SearchIndex
 
 
@@ -198,15 +198,10 @@ def _delta_frame(spark: SparkSession, index_dir: str,
     """Per-term deleted-df/cf deltas for ``victims``, tagged with the
     delete batch id (replay idempotency key). The scan reads the RAW
     docs union (no tombstone filter — the victims are tombstoned by the
-    time this runs, so a SegmentedIndex view would hide exactly the rows
-    whose tokens we need)."""
-    from .build import load_docs
-    raw = None
-    for p in [index_dir] + [segment_dir(index_dir, e)
-                            for e in list_segments(index_dir)]:
-        dd = load_docs(spark, p, load_manifest(p))
-        raw = dd if raw is None else raw.unionByName(dd)
-    return (raw.join(victims, "doc_id", "left_semi")
+    time this runs, so live_docs would hide exactly the rows whose
+    tokens we need)."""
+    return (_docs_of(spark, _part_dirs(index_dir))
+            .join(victims, "doc_id", "left_semi")
             .select("doc_id", F.explode("tokens").alias("term"))
             .groupBy("term")
             .agg(F.countDistinct("doc_id").cast("long").alias("df"),
@@ -327,9 +322,9 @@ def upsert_documents(spark: SparkSession, index_dir: str,
     batch as a new segment — the delete-vector equivalent of the
     reference's per-id REPLACE upsert (src/Storage/SqliteStorage.php:
     359-763). Returns {"replaced": n, "inserted": m, "manifest": ...}."""
-    seg = SegmentedIndex(spark, index_dir)
     keys = transcripts.select("conv_id", "turn_idx").dropDuplicates()
-    victims = (seg.docs().join(keys, ["conv_id", "turn_idx"], "left_semi")
+    victims = (live_docs(spark, index_dir)
+               .join(keys, ["conv_id", "turn_idx"], "left_semi")
                .select("doc_id"))
     n_replaced = _record_tombstones(spark, index_dir, victims)
     manifest = append_segment(spark, index_dir, transcripts, epoch,
@@ -344,15 +339,10 @@ def delete_by_conv_prefix(spark: SparkSession, index_dir: str,
     """S6 deleteByIdPrefix analog: tombstone every doc whose conv_id starts
     with prefix (reference: src/Storage/SqliteStorage.php:775-856).
     Returns the number of tombstoned docs."""
-    from .build import load_docs
-
-    seg = SegmentedIndex(spark, index_dir)
-    victims = (seg.docs()
+    victims = (live_docs(spark, index_dir)
                .where(F.col("conv_id").startswith(prefix))
                .select("doc_id"))
-    n = _record_tombstones(spark, index_dir, victims)
-    seg.close()
-    return n
+    return _record_tombstones(spark, index_dir, victims)
 
 
 def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -366,58 +356,28 @@ def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 # segment-aware view + compaction
 # ---------------------------------------------------------------------------
 
-class SegmentedIndex:
-    """Query view over base + segments (union of docs/postings, term
-    stats merged on the fly). For serving-grade latency, compact."""
+def _part_dirs(index_dir: str) -> list[str]:
+    """The base index directory and its committed segments'."""
+    return [index_dir] + [segment_dir(index_dir, e)
+                          for e in list_segments(index_dir)]
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 cache_postings: bool = False, cache_docs: bool = False):
-        from .query import SearchIndex
 
-        # caches default OFF: this view backs one-shot maintenance scans
-        # (upsert victim lookup, compaction input) — persisting every
-        # part's doc store here would leak a full corpus copy into
-        # executor storage per compaction cycle (Spark's CacheManager
-        # holds cached data even after the Python objects are collected).
-        # GlobalSegmentedIndex is the serving view and manages its own
-        # pinning.
-        self.spark = spark
-        self.index_dir = index_dir
-        parts = [index_dir] + [segment_dir(index_dir, e)
-                               for e in list_segments(index_dir)]
-        self._indexes = [SearchIndex(spark, p, cache_postings=cache_postings,
-                                     cache_docs=cache_docs) for p in parts]
-        self._tomb = load_tombstones(spark, index_dir)
+def _docs_of(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """Union of the docs relations of index part directories (no job)."""
+    out = None
+    for p in dirs:
+        dd = load_docs(spark, p, load_manifest(p))
+        out = dd if out is None else out.unionByName(dd)
+    return out
 
-    def close(self) -> None:
-        for ix in self._indexes:
-            ix.close()
 
-    @property
-    def n_docs(self) -> int:
-        return sum(ix.n_docs for ix in self._indexes)
-
-    def docs(self) -> DataFrame:
-        out = None
-        for ix in self._indexes:
-            out = ix._docs if out is None else out.unionByName(ix._docs)
-        if self._tomb is not None:
-            out = out.join(self._tomb, "doc_id", "left_anti")
-        return out
-
-    def search(self, query, k: int = 10) -> DataFrame:
-        """Per-segment scoring with GLOBAL statistics would require a merged
-        stats pass; this view scores per segment and merges by score — the
-        documented trade-off of querying before compaction (identical to
-        multi-index search, reference J3). Compaction restores exact
-        single-index semantics."""
-        parts = [ix.search(query, k=k) for ix in self._indexes]
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        if self._tomb is not None:
-            merged = merged.join(self._tomb, "doc_id", "left_anti")
-        return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
+    """Live documents of base + segments: the union of the parts' docs
+    relations minus tombstones. Builds a plan and runs no job — the
+    input of upsert victim lookup, prefix deletes and compaction."""
+    docs = _docs_of(spark, _part_dirs(index_dir))
+    tomb = load_tombstones(spark, index_dir)
+    return docs if tomb is None else docs.join(tomb, "doc_id", "left_anti")
 
 
 def _override_rows(batches):
@@ -471,10 +431,6 @@ class GlobalSegmentedIndex(SearchIndex):
                  cache_postings: bool = True, cache_docs: bool = True):
         # deliberately NOT calling SearchIndex.__init__ — the relations
         # come from the union of parts instead of one directory
-        from pyspark.sql import functions as F
-
-        from .build import load_docs
-
         self.spark = spark
         self.index_dir = index_dir
         self.manifest = load_manifest(index_dir)
@@ -482,8 +438,7 @@ class GlobalSegmentedIndex(SearchIndex):
         self.num_buckets = int(cfg.get("num_buckets", 32))
         self.fields = list(cfg.get("fields", ["text"]))
 
-        part_dirs = [index_dir] + [segment_dir(index_dir, e)
-                                   for e in list_segments(index_dir)]
+        part_dirs = _part_dirs(index_dir)
         postings = docs = term_stats = None
         for p in part_dirs:
             m = load_manifest(p)
@@ -734,8 +689,6 @@ def merge_segments(spark: SparkSession, index_dir: str,
     import json
     import shutil
 
-    from .build import load_docs
-
     _finish_interrupted_merge(index_dir)
     # settle crashed delete batches first: the rewrite below drops the
     # deltas' batch tags, and a marker left behind would then replay its
@@ -765,11 +718,7 @@ def merge_segments(spark: SparkSession, index_dir: str,
     # not collision remapping.
     new_ep = max(max(segs) + 1, MERGED_EPOCH_BASE)
 
-    dirs = [segment_dir(index_dir, e) for e in epochs]
-    docs_raw = None
-    for d in dirs:
-        dd = load_docs(spark, d, load_manifest(d))
-        docs_raw = dd if docs_raw is None else docs_raw.unionByName(dd)
+    docs_raw = _docs_of(spark, [segment_dir(index_dir, e) for e in epochs])
     tomb = load_tombstones(spark, index_dir)
     docs = docs_raw if tomb is None \
         else docs_raw.join(tomb, "doc_id", "left_anti")
@@ -796,12 +745,9 @@ def merge_segments(spark: SparkSession, index_dir: str,
         shutil.rmtree(tomb_tmp, ignore_errors=True)
         shutil.rmtree(dd_tmp, ignore_errors=True)
         if n_rem:
-            all_docs = None  # raw union incl. victims (delta tokens)
-            for p in [index_dir] + [segment_dir(index_dir, e)
-                                    for e in segs]:
-                dd = load_docs(spark, p, load_manifest(p))
-                all_docs = dd if all_docs is None \
-                    else all_docs.unionByName(dd)
+            # raw union incl. victims (delta tokens)
+            all_docs = _docs_of(spark, [index_dir] + [
+                segment_dir(index_dir, e) for e in segs])
             remaining.write.parquet(tomb_tmp)
             (all_docs.join(remaining, "doc_id", "left_semi")
              .select("doc_id", F.explode("tokens").alias("term"))
@@ -840,29 +786,23 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str,
     held across a compaction are invalid; resolve deletes/lookups
     against the live view at call time (the engine and
     upsert/delete_by_conv_prefix do)."""
-    seg = SegmentedIndex(spark, index_dir)
-    try:
-        docs = seg.docs()
-        cfg = load_manifest(index_dir).get("config", {})
-        fields = cfg.get("fields", ["text"])
-        # keep every original column except build artifacts
-        drop = {"doc_id", "tokens", "doc_len", "field_lens", "_pid", "_ord"}
-        present = [c for c in docs.columns if c not in drop]
-        # fields and identity must survive; anything else rides along
-        assert all(f in present for f in fields), (fields, present)
-        transcripts = docs.select(*present)
-        kwargs = {"num_buckets": cfg.get("num_buckets", 32),
-                  "block_size": cfg.get("block_size", 128),
-                  "salt_threshold": cfg.get("salt_threshold", 100_000),
-                  "num_salts": cfg.get("num_salts", 16),
-                  "language": cfg.get("language", "english"),
-                  "fields": fields}
-        kwargs.update(build_kwargs)
-        return build_index(spark, transcripts, out_dir,
-                           input_path=f"<compaction of {index_dir}>",
-                           **kwargs)
-    finally:
-        seg.close()
+    docs = live_docs(spark, index_dir)
+    cfg = load_manifest(index_dir).get("config", {})
+    fields = cfg.get("fields", ["text"])
+    # keep every original column except build artifacts
+    drop = {"doc_id", "tokens", "doc_len", "field_lens", "_pid", "_ord"}
+    present = [c for c in docs.columns if c not in drop]
+    # fields and identity must survive; anything else rides along
+    assert all(f in present for f in fields), (fields, present)
+    kwargs = {"num_buckets": cfg.get("num_buckets", 32),
+              "block_size": cfg.get("block_size", 128),
+              "salt_threshold": cfg.get("salt_threshold", 100_000),
+              "num_salts": cfg.get("num_salts", 16),
+              "language": cfg.get("language", "english"),
+              "fields": fields}
+    kwargs.update(build_kwargs)
+    return build_index(spark, docs.select(*present), out_dir,
+                       input_path=f"<compaction of {index_dir}>", **kwargs)
 
 
 def compact_in_place(spark: SparkSession, index_dir: str,

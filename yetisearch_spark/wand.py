@@ -17,7 +17,10 @@ index:
   min_doc), so row-group stats skip the unread data bytes on disk);
   above it the survivor set reaches the scan as a (term, min_doc)
   broadcast semi-join plus an O(1)-row envelope predicate — block
-  METADATA is never driver-materialized above the cap.
+  METADATA is never driver-materialized above the cap. The match
+  tables built from those frames are scored by SearchIndex._score, the
+  exact tier's one BM25 slot scorer, so pruned == exact by construction
+  of the scoring expressions.
 
 Phase 1 has two implementations, chosen by a block-count estimate that
 is derived driver-side from term_stats (df / block_size — zero jobs):
@@ -49,8 +52,10 @@ is derived driver-side from term_stats (df / block_size — zero jobs):
         driver collect (at that density block pruning buys little
         anyway).
 
-Anything else (phrases, NEAR, filters) falls back to the exact full
-path in query.SearchIndex.
+Phrases and NEAR prune with the AND rule over their constituents, and
+an OR mixing terms, phrases and NEARs with the weighted rule
+(_wor_plan). Anything else (NOT, prefixes, nested booleans) falls back
+to the exact full path in query.SearchIndex.
 """
 
 from __future__ import annotations
@@ -58,8 +63,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from .postings import BM25_B, BM25_K1
-from .query import And, Phrase, SearchIndex, parse_query
+from .query import (_DECODED_SCHEMA, And, Near, Or, Phrase, SearchIndex,
+                    _collect_slots, _unique_nears, _unique_phraselike,
+                    decode_plan, parse_query)
+from .xxhash64 import bucket_of
 
 #: phase-1 metadata rows the driver may collect (≈ a few MB)
 DRIVER_CAP = 50_000
@@ -99,7 +106,6 @@ def _is_simple(node) -> tuple[bool, list[str], str]:
         if len(node.terms) == 1:
             return True, [node.terms[0]], "single"
         return True, list(node.terms), "phrase"
-    from .query import Near, Or
     if isinstance(node, Near) and all(
             isinstance(p, Phrase) and len(p.terms) == 1
             for p in node.phrases):
@@ -150,7 +156,6 @@ def _wor_plan(node, stats, index: SearchIndex) -> dict:
     attained by the term, not necessarily by the slot)."""
     slots = []
     need_pos = False
-    from .query import Near  # noqa: F811 (local import pattern of module)
     for c in node.children:
         if isinstance(c, Phrase) and len(c.terms) == 1:
             t = c.terms[0]
@@ -196,8 +201,6 @@ def _count_estimate(index: SearchIndex, node, shape: str,
     bounded by its rarest member), capped at n_docs. Backs the engine's
     ``total_mode: estimate`` policy — a documented divergence from the
     reference's exact per-search count."""
-    from .query import Near
-
     est = 0
     if shape == "or":
         est = sum(stats[c.terms[0]][0]
@@ -227,9 +230,6 @@ def _probe_term_members(index: SearchIndex, term: str,
     light decode IS the cost of a naive union count). The output may
     contain extra docs from partially-covered blocks — callers only use
     it to REMOVE cand rows (anti-join), so a superset is exact."""
-    from .query import decode_plan
-    from .xxhash64 import bucket_of
-
     scan = (index._postings
             .where(F.col("bucket") == bucket_of(term, index.num_buckets))
             .where(F.col("term") == term))
@@ -242,8 +242,7 @@ def _probe_term_members(index: SearchIndex, term: str,
     return dec.select("doc_id")
 
 
-def _exact_count_thunk(index: SearchIndex, node, shape: str, stats: dict,
-                       frames: dict):
+def _exact_count_thunk(index: SearchIndex, node, shape: str, stats: dict):
     """Builder for the EXACT result total of a pruned OR / weighted-OR
     page (the pruned scored frame is top-k-exact but NOT count-complete:
     docs whose every block fell below θ are absent).
@@ -267,7 +266,6 @@ def _exact_count_thunk(index: SearchIndex, node, shape: str, stats: dict,
     Reference parity: the reference runs a full storage COUNT per search
     (src/Search/SearchEngine.php:207) — this is that count, priced for
     10^12 docs."""
-    from .query import Near
 
     def thunk():
         bare: dict[str, int] = {}
@@ -484,16 +482,14 @@ def pruned_scored(index: SearchIndex, node, k: int,
     idf = {t: index.idf(stats[t][0]) for t in terms}
     block_size = int(index.manifest.get("config", {}).get("block_size", 128))
     est_blocks = {t: max(1, -(-stats[t][0] // block_size)) for t in terms}
-    # round 7 (verdict order 2): single-FIELD weighted single/OR never
-    # needs positions (the weighted tally is a fold of w0 over tf —
-    # _contrib_expr_weighted_tfonly reproduces it bit-exactly from the
-    # tf column), so the scaled-bounds selection runs at ANY scale —
-    # above the driver cap it is the Spark-path selection, and the
-    # no-bite worst case decodes light frames, not positional ones.
-    posfree_weighted = (wvec is not None and len(index.fields) == 1
-                        and shape in ("single", "or"))
+    # single-FIELD weighted single/OR never needs positions (a
+    # single-term slot folds w0 over tf — SearchIndex._phrase_contrib,
+    # bit-equal to the positional tally), so the scaled-bounds selection
+    # runs at ANY scale — above the driver cap it is the Spark-path
+    # selection, and the no-bite worst case decodes light frames, not
+    # positional ones.
     if wscale is not None and shape in ("single", "or", "wor") \
-            and not posfree_weighted \
+            and (shape == "wor" or index._weights_need_positions(wvec)) \
             and sum(est_blocks.values()) > driver_cap:
         # multi-field (or mixed-slot wor): the scaled bounds' no-bite
         # case would decode EVERYTHING with positions through the Spark
@@ -513,10 +509,10 @@ def pruned_scored(index: SearchIndex, node, k: int,
         # candidate block with COMPLETE positions), so the pruned phrase
         # table's count IS the slot df. Fill it through a recursive
         # pruned-phrase call — gate forced: a one-time fill whose table
-        # lands in the shared match cache for phase 2 to reuse — count
-        # it once, and cache the df next to the exact path's batched
-        # counts. First sight of a phrase-bearing fuzzy query on a fresh
-        # replica now stays on the pruned path end to end.
+        # lands in the shared match cache, counted once into the df
+        # cache next to the exact path's batched counts. First sight of
+        # a phrase-bearing fuzzy query on a fresh replica stays on the
+        # pruned path end to end.
         for c in node.children:
             if not (isinstance(c, Phrase) and len(c.terms) > 1):
                 continue
@@ -532,10 +528,7 @@ def pruned_scored(index: SearchIndex, node, k: int,
                                            driver_cap=driver_cap,
                                            gate_blocks=0)
                 if index._df_count_cache.get(key) is None:
-                    tbl = index._match_cache.get(key)
-                    if tbl is not None:
-                        index._cache_df(key, int(tbl.count()))
-                    elif sub is None and sinfo.get("reason") == "empty":
+                    if sub is None and sinfo.get("reason") == "empty":
                         index._cache_df(key, 0)
                     else:   # unexpected route — keep the old behavior
                         info["reason"] = "cold-phrase-df"
@@ -602,19 +595,16 @@ def pruned_scored(index: SearchIndex, node, k: int,
             if env["lo"] is not None:
                 env_range = (int(env["lo"]), int(env["hi"]))
 
-    from .query import _DECODED_SCHEMA, decode_plan
-    from .xxhash64 import bucket_of
-
     # ONE frame per term — each posting scan executes exactly once per
     # query (a per-term .where() over a unioned decode would re-run the
     # whole scan+semi-join branch once per term; MapInPandas subtrees
     # never hit ReusedExchange)
     ISIN_CAP = 2048  # literal min_doc lists beyond this go via semi-join
-    # positional kernels downstream? (wvec: weighted tallies read the
-    # per-instance field bits, so the AND shape decodes positions too;
-    # single-field single/OR reweight from tf alone — position-free)
+    # positional kernels downstream? (phrase/NEAR slots, and field
+    # weights that read positions — SearchIndex._weights_need_positions,
+    # the exact tier's test)
     need_pos = shape in ("phrase", "near") \
-        or (wvec is not None and not posfree_weighted) \
+        or index._weights_need_positions(wvec) \
         or (wor is not None and wor["need_pos"])
 
     def term_frame(t: str) -> DataFrame:
@@ -664,254 +654,96 @@ def pruned_scored(index: SearchIndex, node, k: int,
 
     frames = {t: term_frame(t) for t in terms}
 
-    # phase 2 scoring, per shape:
-    #   single — plain projection (no shuffle at all)
-    #   and    — broadcast inner joins of the per-term slices, slot-order
-    #            sum (no shuffle; mirrors the exact path's AND fast path)
-    #   or     — union + ONE aggregation with the ordered fold; flat OR is
-    #            trivially qualified so no slot-set is carried
+    # phase 2: the slot tables of the query tree, built from the pruned
+    # frames and scored by the exact tier's scorer, SearchIndex._score —
+    # same contributions, slot-order accumulation and join-or-aggregate
+    # choice, with copart=False (pruned frames are never co-partitioned,
+    # so a flat AND broadcasts its rarer sides into the largest):
+    #   bare term — the term's pruned frame IS the slot table
     #   phrase — the exact positional kernel (_phrase_match) over the
-    #            pruned frames; the result IS the complete phrase table
-    #            (candidates' positions are block-complete), so its count
-    #            is the exact phrase df for the slot idf AND the exact
-    #            result total
-    #   near   — member match tables from the pruned frames feed the
-    #            exact NEAR trim kernel; member idfs come free from term
-    #            stats (single-term members only — _is_simple)
+    #            pruned frames. The phrase shape's table IS the complete
+    #            phrase table (the AND rule keeps every candidate block
+    #            with complete positions), so its count is the exact
+    #            standalone df for the slot idf AND the exact result
+    #            total; a weighted-OR phrase slot reads the df filled
+    #            before phase 1
+    #   near   — the exact NEAR trim kernel over the pruned member
+    #            frames; member idfs come free from term stats
+    # A dead weighted-OR slot (OOV constituent, zero-df phrase) gets no
+    # table, so it emits no row — as in the exact tier, where its table
+    # is empty.
+    slots: list = []
+    _collect_slots(node, slots)
+    phrase_df: dict = {}
+    for p in _unique_phraselike(node):
+        if len(p.terms) == 1:
+            phrase_df[p] = stats.get(p.terms[0], (0, 0))[0]
+        elif all(t in stats for t in p.terms):
+            phrase_df[p] = index._df_count_cache.get(("ph", p.terms)) or 0
+        else:
+            phrase_df[p] = 0
+    out_info = {"gated": False, "shape": shape, "prune_stats": prune_stats,
+                "count_exact": shape not in ("or", "wor")}
     if shape == "phrase":
         key = ("ph", node.terms)
         tbl = index._match_cache.get(key) if index._cache_postings else None
         if tbl is None:
-            tbl = index._phrase_match(
-                node, frames={t: frames[t] for t in terms}).persist()
+            tbl = index._phrase_match(node, frames=frames).persist()
             if index._cache_postings:
                 index._lru_put(index._match_cache, key, tbl)
             else:
                 index._register_handles([tbl])
-        df_ph = index._df_count_cache.get(key)
-        if df_ph is not None:
-            if df_ph == 0:
-                return None, {"reason": "empty"}
-            contrib = (index._contrib_expr("tf", index.idf(df_ph))
-                       if wvec is None else
-                       index._contrib_expr_weighted(
-                           "positions", index.idf(df_ph), wvec))
-            scored = tbl.select("doc_id", contrib.alias("score"))
-            out_info = {"gated": False, "shape": shape, "total": int(df_ph),
-                        "count_exact": True, "prune_stats": prune_stats}
-            return scored.select("doc_id", "score"), out_info
-        # slot df unknown → compute the idf IN-PLAN from a broadcast
-        # 1-row count of the (complete) pruned table: no separate driver
-        # job — the page action carries it. ln() here is JVM libm vs the
-        # driver's C libm on the cached path: both correctly-rounded
-        # IEEE doubles for these inputs (rank-identity suites run both).
-        cnt = tbl.agg(F.count(F.lit(1)).cast("double").alias("_df"))
-        n = float(index.n_docs)
-        raw_idf = F.log((F.lit(n) - F.col("_df") + 0.5)
-                        / (F.col("_df") + 0.5))
-        idf_col = F.when(raw_idf > 0.0, raw_idf).otherwise(F.lit(1e-6))
-        tf_expr = (F.col("tf").cast("double") if wvec is None
-                   else index._weighted_tf("positions", wvec))
-        scored = (tbl.crossJoin(F.broadcast(cnt))
-                  .select("doc_id",
-                          (idf_col * tf_expr
-                           * (BM25_K1 + 1.0)
-                           / (tf_expr
-                              + BM25_K1 * (1.0 - BM25_B
-                                           + BM25_B
-                                           * F.col("doc_len").cast("double")
-                                           / index.avgdl))).alias("score")))
-        out = scored.select("doc_id", "score")
-        return out, {"gated": False, "shape": shape,
-                     "count_exact": True, "prune_stats": prune_stats}
-    if shape == "near":
-        ptables = {p: frames[p.terms[0]].select("doc_id", "tf", "doc_len",
-                                                "positions")
-                   for p in set(node.phrases)}
-        # wvec: the trim kernel emits field-weighted tf_m directly (the
-        # same kernel the exact path runs), so the contrib expr is
-        # unchanged — exactly _match_scores_build's NEAR fast path
-        ntbl = index._near_table(node, ptables, wvec)
-        score = None
-        for m, p in enumerate(node.phrases):
-            c = index._contrib_expr(f"tf_{m}", idf[p.terms[0]])
-            score = c if score is None else score + c
-        out = ntbl.select("doc_id", score.alias("score"))
-        return out, {"gated": False, "shape": shape,
-                     "count_exact": True, "prune_stats": prune_stats}
-    if shape == "wor":
-        # mirror of query.py's general OR scoring (slot-keyed union +
-        # per-slot conditional sums + slot-order fold — float-identical
-        # accumulation), built over the pruned frames. Dead slots (OOV
-        # constituents, zero-df phrases) emit no branch; their coalesced
-        # 0.0 in the fold matches the exact path's absent-slot behavior.
-        # A term consumed by several slots gets its (small, pruned) frame
-        # persisted so the scan+decode runs once, not once per branch;
-        # the handles ride back for release (bounded registry otherwise).
-        use_count: dict[str, int] = {}
-        for s in wor["slots"]:
-            if s["idf"] is None:
-                continue
-            if s["kind"] == "single":
-                use_count[s["term"]] = use_count.get(s["term"], 0) + 1
-            elif s["kind"] == "phrase":
-                for t in set(s["node"].terms):
-                    use_count[t] = use_count.get(t, 0) + 1
-            else:
-                t = s["node"].phrases[s["member"]].terms[0]
-                use_count[t] = use_count.get(t, 0) + 1
-        wor_handles = []
-        for t, n_use in use_count.items():
-            if n_use > 1:
-                frames[t] = frames[t].persist()
-                wor_handles.append(frames[t])
-        if wor_handles:
-            index._register_handles(wor_handles)
-        def _slot_contrib(idf_v):
-            # wvec: slot tables carry complete positions (need_pos) —
-            # the same weighted exprs the exact path's slots use
-            return (index._contrib_expr("tf", idf_v) if wvec is None
-                    else index._contrib_expr_weighted("positions", idf_v,
-                                                      wvec))
-        contribs = None
-        n_slots = len(wor["slots"])
-        si = 0
-        for c in node.children:
-            if isinstance(c, Phrase) and len(c.terms) == 1:
-                s = wor["slots"][si]
-                if s["idf"] is not None:
-                    br = frames[s["term"]].select(
-                        "doc_id", F.lit(si).alias("slot"),
-                        _slot_contrib(s["idf"]).alias("c"))
-                    contribs = br if contribs is None \
-                        else contribs.unionByName(br)
-                si += 1
-            elif isinstance(c, Phrase):
-                s = wor["slots"][si]
-                if s["idf"] is not None:
-                    tbl = index._phrase_match(c, frames=frames)
-                    br = tbl.select(
-                        "doc_id", F.lit(si).alias("slot"),
-                        _slot_contrib(s["idf"]).alias("c"))
-                    contribs = br if contribs is None \
-                        else contribs.unionByName(br)
-                si += 1
-            else:  # Near
-                if wor["slots"][si]["idf"] is not None:
-                    ptables = {p: frames[p.terms[0]].select(
-                        "doc_id", "tf", "doc_len", "positions")
-                        for p in set(c.phrases)}
-                    # near-table tf_m is already field-weighted (double)
-                    # when wvec rides in — contrib expr unchanged
-                    ntbl = index._near_table(c, ptables, wvec)
-                    for m, p in enumerate(c.phrases):
-                        s = wor["slots"][si + m]
-                        br = ntbl.select(
-                            "doc_id", F.lit(si + m).alias("slot"),
-                            index._contrib_expr(f"tf_{m}",
-                                                s["idf"]).alias("c"))
-                        contribs = br if contribs is None \
-                            else contribs.unionByName(br)
-                si += len(c.phrases)
-        if contribs is None:
+        if key not in index._df_count_cache:
+            phrase_df[node] = int(tbl.count())
+            index._cache_df(key, phrase_df[node])
+        if not phrase_df[node]:
             return None, {"reason": "empty"}
-        sums = [F.sum(F.when(F.col("slot") == i, F.col("c"))).alias(f"_s{i}")
-                for i in range(n_slots)]
-        agg = contribs.groupBy("doc_id").agg(*sums)
-        score = None
-        for i in range(n_slots):  # slot order == FTS5 expression order
-            cc = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-            score = cc if score is None else score + cc
-        out = agg.select("doc_id", score.alias("score"))
-        return out, {"gated": False, "shape": shape, "count_exact": False,
-                     "prune_stats": prune_stats, "handles": wor_handles,
-                     "exact_count": _exact_count_thunk(index, node, shape,
-                                                       stats, frames),
-                     "total_estimate": _count_estimate(index, node, shape,
-                                                       stats)}
-    if shape == "single":
-        t = terms[0]
-        if wvec is None:
-            contrib_1 = index._contrib_expr("tf", idf[t])
-        elif posfree_weighted:
-            contrib_1 = index._contrib_expr_weighted_tfonly(idf[t], wvec[0])
-        else:
-            contrib_1 = index._contrib_expr_weighted("positions", idf[t],
-                                                     wvec)
-        scored = frames[t].select("doc_id", contrib_1.alias("score"))
-    elif shape == "and" and all(
-            d <= index.BROADCAST_DF_CAP
-            for d in sorted(stats[t][0] for t in terms)[:-1]):
-        def _and_contrib(t):
-            # wvec: the complete pruned frames carry positions — per-slot
-            # weighted contribs, same exprs as the exact path
-            return (index._contrib_expr("tf", idf[t]) if wvec is None
-                    else index._contrib_expr_weighted("positions", idf[t],
-                                                      wvec))
-        largest = max(range(len(terms)), key=lambda i: stats[terms[i]][0])
-        joined = None
-        for i, t in enumerate(terms):
-            part = (frames[t]
-                    .select("doc_id", _and_contrib(t).alias(f"c{i}")))
-            if joined is None:
-                joined = part if i == largest else F.broadcast(part)
-            elif i == largest:
-                joined = joined.join(part, "doc_id")
-            else:
-                joined = joined.join(F.broadcast(part), "doc_id")
-        score = None
-        for i in range(len(terms)):  # slot order
-            c = F.col(f"c{i}")
-            score = c if score is None else score + c
-        scored = joined.select("doc_id", score.alias("score"))
-    else:  # over-cap AND, or flat OR: ONE aggregation shuffle of
-        # per-slot conditional sums (each term contributes at most one
-        # row per doc, so sum(when) is exact and the slot-order fold
-        # over coalesce(sᵢ, 0.0) matches FTS5 accumulation — same plain
-        # HashAggregate shape as query.py's scoring, no object agg);
-        # AND additionally requires every slot present
-        contribs = None
-        for i, t in enumerate(terms):
-            if wvec is None:
-                c_expr = index._contrib_expr("tf", idf[t])
-            elif posfree_weighted:
-                c_expr = index._contrib_expr_weighted_tfonly(idf[t], wvec[0])
-            else:
-                c_expr = index._contrib_expr_weighted("positions", idf[t],
-                                                      wvec)
-            branch = (frames[t]
-                      .select("doc_id", F.lit(i).alias("slot"),
-                              c_expr.alias("c")))
-            contribs = branch if contribs is None \
-                else contribs.unionByName(branch)
-        sums = [F.sum(F.when(F.col("slot") == i, F.col("c"))).alias(f"_s{i}")
-                for i in range(len(terms))]
-        scored = contribs.groupBy("doc_id").agg(*sums)
-        score = None
-        for i in range(len(terms)):  # slot order
-            c = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-            score = c if score is None else score + c
-        if shape == "and":
-            qual = None
-            for i in range(len(terms)):
-                e = F.col(f"_s{i}").isNotNull()
-                qual = e if qual is None else (qual & e)
-            scored = scored.where(qual)
-        scored = scored.select("doc_id", score.alias("score"))
-    # tombstoned views were routed to the exact path above (the score
-    # bounds are deletion-unsafe), so phase-2 never sees hidden docs
-    scored = scored.select("doc_id", "score")
-    out_info = {"gated": False, "shape": shape,
-                "prune_stats": prune_stats,
-                "count_exact": shape in ("single", "and")}
+        out_info["total"] = phrase_df[node]
+        phrase_tables = {node: tbl}
+    else:
+        if shape == "wor":
+            _persist_shared(index, frames, slots, phrase_df, out_info)
+        phrase_tables = {p: (frames[p.terms[0]] if len(p.terms) == 1
+                             else index._phrase_match(p, frames=frames))
+                         for p, df in phrase_df.items() if df}
+    # wvec: the trim kernel emits field-weighted tf_m, as on the exact tier
+    near_tables = {nr: index._near_table(
+        nr, {p: frames[p.terms[0]] for p in set(nr.phrases)}, wvec)
+        for nr in _unique_nears(node)
+        if all(phrase_df[p] for p in nr.phrases)}
     if shape == "single":
         out_info["total"] = int(stats[terms[0]][0])
-    elif shape == "or":
-        out_info["exact_count"] = _exact_count_thunk(index, node, shape,
-                                                     stats, frames)
+    elif shape in ("or", "wor"):
+        out_info["exact_count"] = _exact_count_thunk(index, node, shape, stats)
         out_info["total_estimate"] = _count_estimate(index, node, shape,
                                                      stats)
-    return scored, out_info
+    # tombstoned views were routed to the exact path above (the score
+    # bounds are deletion-unsafe), so phase-2 never sees hidden docs
+    return index._score(node, slots, phrase_tables, phrase_df, near_tables,
+                        wvec, copart=False), out_info
+
+
+def _persist_shared(index: SearchIndex, frames: dict, slots: list,
+                    phrase_df: dict, info: dict) -> None:
+    """Weighted-OR phase 2: persist the pruned frame of a term that
+    several live slots read, so its scan+decode runs once, not once per
+    branch; the handles ride back in ``info`` for release (the bounded
+    handle registry otherwise)."""
+    use_count: dict[str, int] = {}
+    for s in slots:
+        p = s[1] if s[0] == "phrase" else s[1].phrases[s[2]]
+        if phrase_df[p] and (s[0] == "phrase"
+                             or all(phrase_df[m] for m in s[1].phrases)):
+            for t in set(p.terms):
+                use_count[t] = use_count.get(t, 0) + 1
+    handles = []
+    for t, n_use in use_count.items():
+        if n_use > 1:
+            frames[t] = frames[t].persist()
+            handles.append(frames[t])
+    if handles:
+        index._register_handles(handles)
+    info["handles"] = handles
 
 
 # ---------------------------------------------------------------------------
